@@ -59,8 +59,9 @@ def norm_expr(a: Column) -> Column:
 
 
 def _mat(vals):
-    """rows → (n × dim) float64 matrix; None when ragged (caller falls
-    back to the exact row-wise fold)."""
+    """rows → (n × dim) float64 matrix; None when the rows are ragged or
+    hold a null vector — the caller then scores row by row with
+    :func:`_row_dot`."""
     import numpy as np
 
     try:
@@ -81,6 +82,39 @@ def _fold_dot(A, B):
         np.multiply(A[:, i], B[:, i], out=tmp)
         np.add(acc, tmp, out=acc)
     return acc
+
+
+def _rows_mat(vals, dim: int):
+    """rows → (n × ``dim``) float64 matrix in which a null row, or one
+    whose length is not ``dim``, is a row of NaN: every cosine against
+    it comes out undefined (NaN), as the Column fold's NULL does. Null
+    elements become NaN too."""
+    import numpy as np
+
+    M = np.full((len(vals), dim), np.nan)
+    for i, v in enumerate(vals):
+        if v is not None and len(v) == dim:
+            M[i] = v
+    return M
+
+
+def _fold_cos(Q, C):
+    """(nq × dim), (m × dim) → (nq × m) cosine matrix. Each cell's dot
+    accumulates float64 products in ascending dimension order and
+    divides by the same ``qn·cn`` product as :func:`_row_dot` and the
+    Catalyst fold — bit-identical per cell, vectorized across cells. A
+    NaN row (see :func:`_rows_mat`) or a zero norm gives NaN cells."""
+    import numpy as np
+
+    acc = np.zeros((Q.shape[0], C.shape[0]), dtype=np.float64)
+    tmp = np.empty_like(acc)
+    for d in range(Q.shape[1]):
+        np.multiply(Q[:, d, None], C[None, :, d], out=tmp)
+        np.add(acc, tmp, out=acc)
+    qn = np.sqrt(_fold_dot(Q, Q))
+    cn = np.sqrt(_fold_dot(C, C))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / (qn[:, None] * cn[None, :])
 
 
 def _row_dot(a, b):
@@ -112,26 +146,6 @@ def _series_dot(a, b):
     return pd.Series(
         [_row_dot(x, y) for x, y in zip(av, bv)], dtype="object"
     ).astype("float64")
-
-
-def _series_norm(a):
-    import numpy as np
-    import pandas as pd
-
-    av = a.to_numpy()
-    if not len(av):
-        return pd.Series([], dtype="float64")
-    if not a.isna().to_numpy().any():
-        A = _mat(av)
-        if A is not None:
-            return pd.Series(np.sqrt(_fold_dot(A, A)))
-    import math
-
-    out = []
-    for v in av:
-        d = _row_dot(v, v)
-        out.append(None if d is None else math.sqrt(d))
-    return pd.Series(out, dtype="object").astype("float64")
 
 
 _DOT_UDF = None
@@ -210,8 +224,9 @@ def cosine_prenormed(a_d: Column, b_d: Column, na: Column, nb: Column) -> Column
     pair pays one dot fold instead of two casts + two norm folds.
     ``dot/(na*nb)`` performs the same double ops in the same order as
     :func:`cosine`, so results are bit-identical; the division runs in
-    the JVM (one codegen'd double op)."""
-    return dot(a_d, b_d) / (na * nb)
+    the JVM (one codegen'd double op). A zero norm scores NULL
+    (``try_divide``) instead of raising ``DIVIDE_BY_ZERO`` under ANSI."""
+    return F.try_divide(dot(a_d, b_d), na * nb)
 
 
 def hyperplane_bits(arr: Column, planes: list[list[float]]) -> Column:

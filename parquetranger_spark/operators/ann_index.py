@@ -1225,38 +1225,33 @@ class AnnIndex:
         centroid cosines here — bounded by the index, never the data —
         replaces a crossJoin + window + eager localCheckpoint + a
         probed-id distinct collect (3 jobs per serve round, guide §1.2).
-        The cosine is the same sequential float64 fold the Catalyst/
-        Arrow expression evaluates (bit-identical), and the order
-        replicates Spark's (c_cos DESC, list_id) row_number exactly:
-        NaN first (DESC treats NaN as largest), NULL cosine last.
+        The cosines are one |queries| × n_lists matrix fold
+        (:func:`~..functions.vectors._fold_cos`), bit-identical to the
+        sequential float64 fold the Catalyst/Arrow expression evaluates,
+        and the order is (c_cos DESC, list_id) with the exact top-k
+        policy: an undefined cosine (null or ragged query, NaN element,
+        zero norm) ranks after every real one, ties by list_id.
         Returns [(query_id, qv, qn, [list_id, ...])] with qn computed by
-        the same fold as the ``norm`` column it replaces."""
-        import math
+        the same fold as the ``norm`` column it replaces (NaN for a null
+        or ragged query, whose every cosine is undefined)."""
+        import numpy as np
 
-        from ..functions.vectors import _row_dot
+        from ..functions.vectors import _fold_cos, _fold_dot, _rows_mat
 
-        cents = []
-        for lid, c in self._centroid_pairs():
-            cd = _row_dot(c, c)
-            cents.append((lid, c, None if cd is None else math.sqrt(cd)))
-        out = []
-        for qid, qv in q_rows:
-            qd = _row_dot(qv, qv)
-            qn = None if qd is None else math.sqrt(qd)
-            scored = []
-            for lid, c, cn in cents:
-                d = _row_dot(qv, c)
-                cos = None if d is None or qn is None or cn is None else d / (qn * cn)
-                if cos is None:
-                    key = (2, 0.0, lid)
-                elif math.isnan(cos):
-                    key = (0, 0.0, lid)
-                else:
-                    key = (1, -cos, lid)
-                scored.append((key, lid))
-            scored.sort(key=lambda t: t[0])
-            out.append((qid, qv, qn, [lid for _, lid in scored[:n_probe]]))
-        return out
+        cents = self._centroid_pairs()
+        dim = len(cents[0][1]) if cents else 0
+        lids = np.array([lid for lid, _ in cents], dtype=np.int64)
+        Q = _rows_mat([qv for _, qv in q_rows], dim)
+        cos = _fold_cos(Q, _rows_mat([c for _, c in cents], dim))
+        undef = np.isnan(cos)
+        order = np.lexsort(
+            (np.broadcast_to(lids, cos.shape), np.where(undef, 0.0, -cos), undef)
+        )[:, :n_probe]
+        qn = np.sqrt(_fold_dot(Q, Q))
+        return [
+            (qid, qv, float(qn[i]), lids[order[i]].tolist())
+            for i, (qid, qv) in enumerate(q_rows)
+        ]
 
     def _topk_once(
         self,

@@ -2,9 +2,10 @@
 as the exactness baseline, random-hyperplane-LSH bucketed top-k as the
 scale path.
 
-Scale design: brute force is a broadcast of the (small) query side against
-a full corpus scan — one pass, no corpus shuffle, top-k via per-query
-window. The LSH path replaces the corpus-wide scan with an equi-join on
+Scale design: brute force ships the (small) collected query matrix to a
+kernel that streams the corpus once — one pass, no corpus shuffle, top-k
+via per-query window; undefined cosines (null, ragged, NaN, zero norm)
+rank last. The LSH path replaces the corpus-wide scan with an equi-join on
 bucket keys, turning O(|Q|·|C|) into O(Σ bucket sizes); recall is tested
 in tests/test_pipeline_ops.py.
 """
@@ -26,6 +27,12 @@ def default_planes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[fl
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
+# per-pass cap on the shipped query matrix: a larger query batch is cut
+# into blocks of at most this many bytes, each scored in its own
+# corpus pass
+_QUERY_BLOCK_BYTES = 256 << 20
+
+
 def topk_cosine_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -35,20 +42,27 @@ def topk_cosine_bruteforce(
     corpus_min_width: int | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine. The query side is small
-    by contract (the old shape broadcast it for a nested-loop join whose
-    output materialized BOTH vectors once per pair — |Q|·|C|·dim doubles
-    through the Arrow boundary); the corpus is streamed ONCE through a
-    mapInPandas kernel holding the collected query matrix (shipped
-    size-gated via broadcast, the guide-§8 "move heavy bytes exactly
-    once" shape), which emits only per-batch top-k candidate triples.
-    Scores are BIT-IDENTICAL to the Catalyst fold: the kernel
-    accumulates float64 products in ascending dimension order (the
-    vectors.py column-accumulate device) and divides by the same
-    (qn·cn) product, and the final rank is still a per-query window with
-    the (cos desc, neighbor_id) tie-break over the surviving candidates,
-    so null/NaN ordering stays Spark's. Falls back to the original
-    broadcast-join plan for non-integral ids, null/ragged query vectors,
-    or a query matrix too big to ship.
+    by contract: it is collected once, shipped to the executors
+    (size-gated broadcast, :func:`_ship`) and the corpus streams ONCE
+    through a mapInPandas kernel that scores every (query, candidate)
+    cell of a batch and emits a per-batch candidate superset; a
+    per-query window with the (cos desc, neighbor_id) order decides the
+    final ranks. A query matrix over ``_QUERY_BLOCK_BYTES`` (256 MB) is
+    cut into blocks of at most that size, each scored in its own corpus
+    pass; the candidates are unioned before the one window.
+
+    Scores are BIT-IDENTICAL to the Catalyst fold: float64 products
+    accumulate in ascending dimension order and divide by the same
+    (qn·cn) product (:func:`~..functions.vectors._fold_cos`).
+
+    Edge-input policy, the same for any id type and any input:
+
+    * a pair's cosine is UNDEFINED when either vector is null, their
+      lengths differ, or the fold yields NaN (a NaN or null element, a
+      zero norm); it is returned as NULL and ranks after every real
+      score, ties broken by ``neighbor_id``;
+    * a row with a null query or neighbor id produces no output;
+    * self-pairs (query_id == neighbor_id) are excluded.
 
     ``corpus_min_width``: optional repartition of the corpus side before
     the kernel. The scoring stage's width is the corpus's scan width —
@@ -57,157 +71,68 @@ def topk_cosine_bruteforce(
     while the other cores idle (guide §2.6). Callers set it ONLY for
     corpora they know are bounded (exact-twin tiers) or already probed
     narrow — it is an unconditional shuffle, wrong for a 100 TB scan."""
-    from ..functions.vectors import _mat, to_double
+    from functools import reduce
+
+    from ..functions.vectors import _fold_cos, _rows_mat, to_double
 
     q = queries.select(
         F.col(id_col).alias("query_id"), to_double(F.col(vec_col)).alias("qv")
-    )
+    ).where(F.col("query_id").isNotNull())
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
-    )
+    ).where(F.col("neighbor_id").isNotNull())
     if corpus_min_width and corpus_min_width > 1:
         c = c.repartition(int(corpus_min_width))
-    integral = all(
-        df.schema[n].dataType.simpleString() in ("tinyint", "smallint", "int", "bigint")
-        for df, n in ((q, "query_id"), (c, "neighbor_id"))
-    )
-    Q = qids = None
-    if integral:
-        rows = q.collect()
-        if rows and all(r["qv"] is not None for r in rows):
-            # in-array nulls arrive as NaN through Arrow — they stay on
-            # the fast path (the batched fold computes the same NaN);
-            # a ragged stack returns None and forces the fallback
-            Q = _mat([r["qv"] for r in rows])
-            qids = [r["query_id"] for r in rows]
-    if Q is None or Q.ndim != 2 or Q.shape[1] == 0 or Q.nbytes > (256 << 20):
-        return _topk_bruteforce_join(q, c, k)
-
-    import numpy as np
-
-    from ..functions.vectors import _fold_dot, _row_dot
-
-    qn = np.sqrt(_fold_dot(Q, Q))
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    spark = corpus.sparkSession
-    shipped = _ship(spark.sparkContext, (qid_arr, Q, qn), Q.nbytes)
-    kk = int(k)
     qtype = q.schema["query_id"].dataType.simpleString()
     ctype = c.schema["neighbor_id"].dataType.simpleString()
     out_schema = f"query_id {qtype}, neighbor_id {ctype}, cos double"
-    fold_dot, row_dot = _fold_dot, _row_dot  # closure-captured (module
+    rows = [(r["query_id"], r["qv"]) for r in q.collect()]
+    sc = corpus.sparkSession.sparkContext
+    kk = max(int(k), 1)
+    fold_cos, rows_mat = _fold_cos, _rows_mat  # closure-captured (module
     # is cloudpickle-registered by value: no repo on executor sys.path)
 
-    def _score(batches):
-        import math as _math
+    def _kernel(shipped):
+        def _score(batches):
+            import numpy as _np
+            import pandas as _pd
 
-        import numpy as _np
-        import pandas as _pd
-
-        pack = shipped.value if hasattr(shipped, "value") else shipped
-        _qids, _Q, _qn = pack
-        nq, dim = _Q.shape
-        for pdf in batches:
-            m = len(pdf)
-            if not m or not nq:
-                continue
-            nids = pdf["neighbor_id"].to_numpy()
-            cvs = pdf["cv"].to_numpy()
-            lens = _np.fromiter(
-                ((len(v) if v is not None else -1) for v in cvs), dtype=_np.int64, count=m
-            )
-            ok = lens == dim
-            frames = []
-            if ok.any():
-                C = _np.stack(
-                    [_np.asarray(cvs[j], dtype=_np.float64) for j in _np.flatnonzero(ok)]
-                )
-                nid_ok = _np.asarray(nids[ok], dtype=_np.int64)
-                mv = C.shape[0]
-                # per-pair sequential fold, vectorized across pairs: every
-                # (query, candidate) cell accumulates q_d·c_d in ascending
-                # d — bit-identical to the zip_with/aggregate fold
-                acc = _np.zeros((nq, mv), dtype=_np.float64)
-                tmp = _np.empty((nq, mv), dtype=_np.float64)
-                for d in range(dim):
-                    _np.multiply(_Q[:, d, None], C[None, :, d], out=tmp)
-                    _np.add(acc, tmp, out=acc)
-                cn = _np.sqrt(fold_dot(C, C))
-                cos = acc / (_qn[:, None] * cn[None, :])
-                # selection keys replicating Spark's DESC total order:
-                # NaN first, then cos descending, ties on neighbor_id asc
-                isnan = _np.isnan(cos)
-                key_a = (~isnan).astype(_np.int8)  # NaN → 0 → first
-                key_b = _np.where(isnan, 0.0, -cos)
-                same = _qids[:, None] == nid_ok[None, :]
-                key_a[same] = 2  # self-pairs: dead-last, dropped below
-                take = min(kk, mv)
-                # prefilter superset: single coarse key (NaN/self folded
-                # to the extremes), boundary ties included, exact 3-key
-                # sort only on the survivors
-                coarse = _np.where(isnan, -_np.inf, -cos)
-                coarse[same] = _np.inf
-                out_q, out_n, out_c = [], [], []
-                for i in range(nq):
-                    if take < mv:
-                        part = _np.argpartition(coarse[i], take - 1)[:take]
-                        kth = coarse[i][part].max()
-                        cand = _np.flatnonzero(coarse[i] <= kth)
-                    else:
-                        cand = _np.arange(mv)
-                    order = _np.lexsort((nid_ok[cand], key_b[i, cand], key_a[i, cand]))
-                    cand = cand[order][:take]
-                    cand = cand[~same[i, cand]]
-                    out_q.append(_np.full(len(cand), _qids[i]))
-                    out_n.append(nid_ok[cand])
-                    out_c.append(cos[i, cand])
-                frames.append(
-                    _pd.DataFrame(
-                        {
-                            "query_id": _np.concatenate(out_q),
-                            "neighbor_id": _np.concatenate(out_n),
-                            "cos": _np.concatenate(out_c),
-                        }
-                    )
-                )
-            # null/ragged candidate rows: exact row-wise fold against
-            # every query, preserving Catalyst null semantics (zip_with
-            # length mismatch or a null vector → NULL cos, which the
-            # downstream window ranks nulls-LAST like the old join plan)
-            bad = _np.flatnonzero(~ok)
-            if len(bad):
-                b_q, b_n, b_c = [], [], []
-                qlists = [list(_Q[i]) for i in range(nq)]
-                for j in bad:
-                    v = None if cvs[j] is None else list(cvs[j])
-                    vn = row_dot(v, v)
-                    for i in range(nq):
-                        if int(_qids[i]) == nids[j]:
-                            continue
-                        dv = row_dot(qlists[i], v)
-                        b_q.append(int(_qids[i]))
-                        b_n.append(nids[j])
-                        b_c.append(
-                            None
-                            if dv is None or vn is None
-                            else dv / (float(_qn[i]) * _math.sqrt(vn))
+            groups = shipped.value if hasattr(shipped, "value") else shipped
+            for pdf in batches:
+                m = len(pdf)
+                if not m:
+                    continue
+                nids = pdf["neighbor_id"].to_numpy()
+                cvs = pdf["cv"].to_numpy()
+                # undefined cells order by neighbor id: its rank in the batch
+                nrank = _np.empty(m)
+                nrank[_np.argsort(nids, kind="stable")] = _np.arange(m)
+                take = min(kk, m)
+                for qids, Q in groups:
+                    cos = fold_cos(Q, rows_mat(cvs, Q.shape[1]))
+                    # one sort key per cell: real scores by -cos (a -inf
+                    # cos clamps to just past the finite ones), then the
+                    # undefined cells by neighbor id, self-pairs last
+                    undef = _np.isnan(cos)
+                    key = _np.where(undef, _np.inf, -cos)
+                    top = _np.max(key, where=_np.isfinite(key), initial=0.0)
+                    key = _np.where(undef, top + 2.0 + nrank, _np.minimum(key, top + 1.0))
+                    key[qids[:, None] == nids[None, :]] = _np.inf
+                    # boundary ties all pass: a superset, ranked by the window
+                    kth = _np.partition(key, take - 1, axis=1)[:, take - 1, None]
+                    qi, ci = _np.nonzero((key <= kth) & (key < _np.inf))
+                    if len(qi):
+                        yield _pd.DataFrame(
+                            {"query_id": qids[qi], "neighbor_id": nids[ci], "cos": cos[qi, ci]}
                         )
-                frames.append(
-                    _pd.DataFrame(
-                        {
-                            "query_id": _pd.Series(b_q, dtype="int64"),
-                            "neighbor_id": _pd.Series(b_n, dtype="int64"),
-                            "cos": _pd.Series(b_c, dtype="object").astype("float64")
-                            if all(x is not None for x in b_c)
-                            else _pd.array(b_c, dtype="Float64"),
-                        }
-                    )
-                )
-            for f in frames:
-                if len(f):
-                    yield f
 
-    cand = c.mapInPandas(_score, out_schema)
+        return _score
+
+    parts = [
+        c.mapInPandas(_kernel(_ship(sc, blk, nbytes)), out_schema)
+        for blk, nbytes in _query_blocks(rows, _QUERY_BLOCK_BYTES)
+    ]
+    cand = reduce(DataFrame.unionAll, parts)
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -216,33 +141,38 @@ def topk_cosine_bruteforce(
     )
 
 
-def _topk_bruteforce_join(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
-    """The original broadcast-nested-loop plan (fallback path): exact,
-    any id type, lazy — per pair both vectors cross the Arrow boundary
-    for the dot fold, so the kernel path above is preferred whenever the
-    query matrix ships."""
-    from ..functions.vectors import cosine_prenormed, norm
+def _query_blocks(rows: list, cap: int) -> list:
+    """Collected (query_id, vector) rows → ``[(block, nbytes)]``, each
+    block a list of ``(query_ids, matrix)`` groups of one vector length
+    holding at most ``cap`` matrix bytes (always at least one row). A
+    null vector rides as a NaN row of the first group: every cosine
+    against it is undefined. No rows → one empty block, so the plan
+    keeps its shape."""
+    import numpy as np
 
-    q = q.withColumn("qn", norm(F.col("qv")))
-    c = c.withColumn("cn", norm(F.col("cv")))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prenormed(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    from ..functions.vectors import _rows_mat
+
+    by_len: dict = {}
+    for qid, v in rows:
+        by_len.setdefault(None if v is None else len(v), []).append((qid, v))
+    nulls = by_len.pop(None, [])
+    groups = sorted(by_len.items()) or [(0, [])]
+    groups[0] = (groups[0][0], groups[0][1] + nulls)
+    blocks, cur, room = [], [], cap
+    for dim, grp in groups:
+        row_b = 8 * max(dim, 1)
+        while grp:
+            if cur and room < row_b:
+                blocks.append(cur)
+                cur, room = [], cap
+            n = max(1, room // row_b)
+            part, grp = grp[:n], grp[n:]
+            ids = np.asarray([qid for qid, _ in part])
+            cur.append((ids, _rows_mat([v for _, v in part], dim)))
+            room -= len(part) * row_b
+    if cur or not blocks:
+        blocks.append(cur)
+    return [(b, sum(Q.nbytes for _, Q in b)) for b in blocks]
 
 
 def topk_cosine_lsh(
@@ -790,9 +720,10 @@ def knn_density_ivf(
     2. **bounded exact rescan**: the ``rerank`` most-isolated vectors by
        estimate (plus any vector whose candidate set had fewer than k
        neighbors) re-score against the full corpus via
-       :func:`topk_cosine_bruteforce` — O(rerank · n) with ``rerank`` a
-       constant, the standard ANN re-rank device, restoring exact
-       kth-NN values exactly where the outlier ranking is decided.
+       :func:`topk_cosine_bruteforce`'s streamed kernel — O(rerank · n)
+       with ``rerank`` a constant, the standard ANN re-rank device,
+       restoring exact kth-NN values exactly where the outlier ranking
+       is decided (an undefined cosine ranks last, as it does there).
 
     Pair count is |corpus|² · n_probe / n_lists, so ``n_lists`` MUST
     grow with the corpus — the default is the standard IVF balance
@@ -800,7 +731,8 @@ def knn_density_ivf(
     generation at O(n^1.5 · n_probe / √1) — the sub-quadratic IVF
     contract real systems (FAISS IVFFlat) run; a FIXED list count would
     silently degrade toward all-pairs as the corpus grows. Step 2
-    broadcasts ``rerank`` rows. Nothing is ever a cross join.
+    ships ``rerank`` query rows to one corpus pass. Nothing is ever a
+    cross join.
     ``rerank=None`` returns the raw (underestimated) densities."""
     if n_lists is None:
         import math

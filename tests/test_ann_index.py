@@ -36,6 +36,36 @@ def test_build_query_recall(spark, idx):
     assert hits / total >= 0.6  # IVF recall floor at n_probe=6/16
 
 
+def test_query_zero_norm_query_vector(spark, idx):
+    # a zero-norm query scores every centroid and neighbor undefined:
+    # no ZeroDivisionError/DIVIDE_BY_ZERO, k rows ranked by neighbor id,
+    # probes ranked by list_id
+    idx.build(_vectors(spark, 200), n_lists=8, seed=1)
+    zq = spark.createDataFrame([(999, [0.0] * 8)], "vec_id long, embedding array<double>")
+    got = sorted(map(tuple, idx.query(zq, k=3, n_probe=2).collect()), key=lambda r: r[2])
+    assert [r[2] for r in got] == [1, 2, 3]
+    assert all(r[3] is None for r in got)
+    assert [r[1] for r in got] == sorted(r[1] for r in got)
+    assert idx._probe_rows([(999, [0.0] * 8)], 3)[0][3] == [0, 1, 2]
+
+
+def test_query_corpus_with_zero_norm_row(spark, idx):
+    # one zero-norm corpus row scores NULL in the rerank instead of
+    # raising; probing every list reproduces the exact answer
+    corpus = _vectors(spark, 200).withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == 0, F.array_repeat(F.lit(0.0), 8)).otherwise(
+            F.col("embedding")
+        ),
+    ).cache()
+    idx.build(corpus, n_lists=8, seed=1)
+    q = corpus.where(F.col("vec_id") < 4)
+    got = sorted(map(tuple, idx.query(q, k=3, n_probe=8).collect()))
+    exact = sorted(map(tuple, topk_cosine_bruteforce(q, corpus, k=3).collect()))
+    assert got == exact
+    assert [r[3] for r in got if r[0] == 0] == [None] * 3
+
+
 def test_add_routes_to_existing_lists(spark, idx):
     corpus = _vectors(spark, 300).cache()
     idx.build(corpus, n_lists=8, seed=1)

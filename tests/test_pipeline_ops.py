@@ -2,8 +2,12 @@
 ANN behavior on near-identical vectors, text functions, multimodal
 plumbing."""
 
+import math
+
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from parquetranger_spark.functions.text import lang_id, quality_score, doc_fingerprint
@@ -101,57 +105,133 @@ def test_bruteforce_topk_is_exact_and_ranked(spark, vecs):
         assert qid not in set(grp.neighbor_id)  # self excluded
 
 
-def test_bruteforce_kernel_matches_join_plan(spark):
-    """Round-11 kernel tripwire: the streamed mapInPandas scoring path
-    must return the EXACT rows (ids, ranks, bit-identical cos) of the
-    broadcast-join plan it replaced — including null query vectors
-    (forced onto the fallback), null/ragged CANDIDATE rows (NULL cos,
-    ranked nulls-last), NaN elements (NaN cos ranks FIRST under DESC),
-    per-batch boundary ties, and string ids (fallback path)."""
-    from parquetranger_spark.operators.similarity import _topk_bruteforce_join
-    from parquetranger_spark.functions.vectors import to_double, norm
+def _ref_topk(qrows, crows, k):
+    """Plain-Python reference of the exact top-k policy: sequential
+    ``acc = acc + x*y`` folds; a pair's cosine is undefined (None) when
+    either vector is null, the lengths differ or the fold yields NaN,
+    and ranks after every real score, ties by neighbor id; null ids
+    produce no output; self-pairs are excluded."""
 
-    rows = [(i, [float(i % 5), 1.0, 0.25 * (i % 3)]) for i in range(60)]
-    rows += [
-        (100, None),  # null candidate vector
-        (101, [1.0, 2.0]),  # ragged
-        (102, [float("nan"), 1.0, 0.5]),  # NaN element
-        (103, [0.0, 1.0, 0.0]),  # tie fodder
-    ]
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = corpus.where(F.col("vec_id").isin([0, 5, 102]))
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
 
-    def via_join(qdf, cdf, k):
-        qq = qdf.select(
-            F.col("vec_id").alias("query_id"), to_double(F.col("embedding")).alias("qv")
-        )
-        cc = cdf.select(
-            F.col("vec_id").alias("neighbor_id"),
-            to_double(F.col("embedding")).alias("cv"),
-        )
-        return _topk_bruteforce_join(qq, cc, k)
+    def cos(a, b):
+        if a is None or b is None or len(a) != len(b):
+            return None
+        a = [math.nan if x is None else x for x in a]
+        b = [math.nan if x is None else x for x in b]
+        den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
+        v = fold(a, b) / den if den else math.nan  # zero norm: 0/0
+        return None if math.isnan(v) else v
 
-    for k in (3, 70):  # k < corpus and k > corpus
-        a = sorted(
-            map(tuple, topk_cosine_bruteforce(q, corpus, k=k).collect())
-        )
-        b = sorted(map(tuple, via_join(q, corpus, k).collect()))
-        assert len(a) == len(b)
-        for ra, rb in zip(a, b):
-            assert ra[:3] == rb[:3], (ra, rb)
-            ca, cb = ra[3], rb[3]
-            assert (ca is None and cb is None) or ca == cb or (
-                ca != ca and cb != cb  # both NaN
-            ), (ra, rb)
+    out = []
+    for qid in sorted({q for q, _ in qrows if q is not None}):
+        scored = [
+            (cos(qv, cv), nid)
+            for q, qv in qrows
+            if q == qid
+            for nid, cv in crows
+            if nid is not None and nid != qid
+        ]
+        scored.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+        out += [(qid, nid, r, c) for r, (c, nid) in enumerate(scored[:k], 1)]
+    return out
 
-    # a null QUERY vector and string ids both force the fallback plan —
-    # results must still match the join semantics (smoke: it runs and
-    # self-pairs stay excluded)
-    sq = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", None)], "vec_id string, embedding array<double>"
+
+def _run_topk(spark, qrows, crows, k, kind, layout):
+    schema = f"vec_id {kind}, embedding array<double>"
+    corpus = spark.createDataFrame(crows, schema)  # one slice per core
+    if layout == "single":
+        corpus = corpus.coalesce(1)
+    got = topk_cosine_bruteforce(spark.createDataFrame(qrows, schema), corpus, k=k)
+    return sorted(map(tuple, got.collect()), key=lambda r: (r[0], r[2]))
+
+
+_ELEM = st.sampled_from([None, math.nan, 0.0, 0.0, 1.0, -1.0, 0.5, 2.0])
+_VEC = st.one_of(
+    st.lists(_ELEM, min_size=3, max_size=3),
+    st.none(),
+    st.lists(_ELEM, min_size=0, max_size=4),  # ragged
+)
+
+
+@st.composite
+def _topk_case(draw):
+    ids = draw(st.lists(st.integers(0, 99), min_size=1, max_size=9, unique=True))
+    rows = [(i, draw(_VEC)) for i in ids]
+    rows += [(None, draw(_VEC)) for _ in range(draw(st.integers(0, 1)))]
+    qidx = draw(st.sets(st.integers(0, len(rows) - 1), min_size=1, max_size=3))
+    k = draw(st.integers(1, len(rows) + 2))
+    return rows, sorted(qidx), k, draw(st.sampled_from(["long", "string"]))
+
+
+_Q1, _V2 = [1.0, 0.0, 0.0, 0.0], [9.0, 1.0, 0.0, 0.0]  # cos(1, 2) = 0.99388…
+_V4 = [0.0, 0.0, 1.0, 0.0]  # orthogonal to the query: cos 0.0
+
+
+@given(case=_topk_case(), expected=st.none())
+# (a) a NaN candidate must not evict the real rank-2 neighbor
+@example(
+    case=(
+        [(1, _Q1), (2, _V2), (3, [math.nan, 1.0, 0.0, 0.0]), (4, _V4),
+         (5, [1.0, 1.0, 1.0, 1.0]), (6, [-1.0, 0.0, 0.0, 0.0])],
+        [0], 2, "long",
+    ),
+    expected=[(1, 2, 1, 0.9938837346736188), (1, 5, 2, 0.5)],
+)
+# (b) a null neighbor id produces no row (was INT64_MIN at rank 1)
+@example(
+    case=([(1, _Q1), (2, _V2), (None, _Q1), (4, _V4)], [0], 2, "long"),
+    expected=[(1, 2, 1, 0.9938837346736188), (1, 4, 2, 0.0)],
+)
+# (c) a zero-norm row scores NULL and ranks last (the join raised)
+@example(
+    case=([(1, _Q1), (2, _V2), (3, [0.0] * 4), (4, _V4)], [0], 3, "long"),
+    expected=[(1, 2, 1, 0.9938837346736188), (1, 4, 2, 0.0), (1, 3, 3, None)],
+)
+# (d) string ids take the same kernel, zero norm included
+@example(
+    case=([("a", [1.0, 0.0]), ("b", [0.0, 0.0]), ("c", [1.0, 1.0])], [0], 2, "string"),
+    expected=[("a", "c", 1, 0.7071067811865475), ("a", "b", 2, None)],
+)
+@settings(max_examples=5, deadline=None)
+def test_bruteforce_matches_python_reference(spark, case, expected):
+    """Differential check of the streamed top-k kernel against the
+    plain-Python policy reference: same rows, same ranks, bit-identical
+    cos, on a single-partition and a multi-partition corpus."""
+    rows, qidx, k, kind = case
+    if kind == "string":
+        rows = [(None if i is None else str(i), v) for i, v in rows]
+    qrows = [rows[i] for i in qidx]
+    want = _ref_topk(qrows, rows, k)
+    if expected is not None:
+        assert want == expected
+    for layout in ("single", "multi"):
+        assert _run_topk(spark, qrows, rows, k, kind, layout) == want, layout
+
+
+def test_bruteforce_query_blocks_match_single_block(spark, monkeypatch):
+    """A query matrix over the ship cap is scored block by block, one
+    corpus pass each, and the union ranks exactly like one block."""
+    from parquetranger_spark.operators import similarity
+
+    crows = [(i, [float(i % 5), 1.0, 0.25 * (i % 3)]) for i in range(20)]
+    crows += [(20, None), (21, [1.0, 2.0]), (22, [math.nan, 1.0, 0.5]), (23, [0.0] * 3)]
+    qrows = [crows[i] for i in (0, 3, 5, 8, 20, 21, 22, 23)]
+    single = _run_topk(spark, qrows, crows, 4, "long", "multi")
+    assert single == _ref_topk(qrows, crows, 4)
+
+    cut = []
+    blocks = similarity._query_blocks
+    monkeypatch.setattr(similarity, "_QUERY_BLOCK_BYTES", 2 * 3 * 8)  # two dim-3 rows
+    monkeypatch.setattr(
+        similarity, "_query_blocks", lambda rows, cap: cut.append(blocks(rows, cap)) or cut[-1]
     )
-    out = topk_cosine_bruteforce(sq, sq, k=1).collect()
-    assert all(r["query_id"] != r["neighbor_id"] for r in out)
+    assert _run_topk(spark, qrows, crows, 4, "long", "multi") == single
+    assert len(cut[-1]) >= 3
 
 
 def test_text_functions_shapes(spark, docs):

@@ -725,143 +725,52 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
+    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph — the step
     that turns pairwise matches into dedup clusters (keep one
-    representative per component, drop the rest).
+    representative per component, drop the rest). Returns (id,
+    component), component = the minimum id reachable from ``id``.
 
-    HashMin label propagation: every vertex starts labeled with its own
-    id; each round pushes labels across edges and keeps the minimum, so
-    labels converge to the component-minimum id in O(graph diameter)
-    rounds. Near-dup graphs are cliquish (diameter 2-3), so a handful of
-    rounds suffices; ``max_iter`` bounds pathological chains. For
-    planet-scale graphs the round-compressing large-star/small-star
-    variant (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") drops the round count to O(log n) — same per-round shape.
+    Alternating large-star/small-star edge rewrites (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): large-star
+    points every vertex's larger neighbors at its minimum neighbor,
+    small-star re-hangs its smaller neighbors there. The edge set
+    converges to stars rooted at each component's minimum id in O(log n)
+    rounds, so a long chain (crawl mirrors of mirrors) costs a few rounds
+    more than a near-dup clique, not one round per hop. Each star step is
+    ONE shuffle of the edge set: a min-over-neighborhood window on the
+    vertex id, which every row carries, instead of a groupBy-min plus a
+    join back.
 
-    Per round: one equi-join (edges ⋈ labels, shuffled on vertex id) and
-    one min-aggregate; labels are eagerly localCheckpoint-ed so lineage
-    stays flat, and the (small) edge list is persisted across rounds.
-    The convergence probe is a count action per round — an aggregate,
-    never a data-sized collect. Returns (id, component) where component
-    is the minimum reachable vertex id; only vertices that appear in at
-    least one pair are returned (singletons need no dedup decision).
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "component", F.col("id")
-    )
-    # lazy checkpoint: the _label_sum action right below materializes it —
-    # one job for materialize+probe instead of two (guide §1.2, the same
-    # job-count discipline as the ANN metadata frames)
-    labels = labels.localCheckpoint(eager=False)
+    Each round's edges are cut with a lazy localCheckpoint, materialized
+    in the same job as the convergence probe: a constant-size fingerprint
+    aggregate (count + 64-bit pair-hash sum, plus decimal endpoint sums
+    for numeric ids; decimal casts of string ids would throw under ANSI).
+    An unchanged fingerprint is the fixpoint. Past ``max_iter`` rounds it
+    raises ``RuntimeError`` rather than return half-merged components.
 
-    numeric_ids = isinstance(
-        pairs.schema[id_a].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
-    )
+    Only one ``distinct`` runs per round, at the end of small-star. The
+    input edges and large-star's output keep their duplicates: a window
+    minimum does not change when a row repeats, and small-star's
+    ``distinct`` folds them before the next checkpoint. So the first
+    round's fingerprint differs from the input's when the input holds
+    duplicate pairs, which costs at most one extra round.
 
-    def _label_sum(lb) -> tuple:
-        # numeric ids: labels only ever DECREASE (min-propagation), so the
-        # decimal label sum is strictly monotone until the fixpoint — an
-        # unchanged sum IS convergence, one tiny aggregate per round
-        # instead of a labels⋈labels diff join (decimal: overflow-immune
-        # at any id range × vertex count). Non-numeric ids (string doc
-        # keys) cannot cast to decimal — under ANSI the cast THROWS, and
-        # with ANSI off it would null out and declare convergence after
-        # one round, silently splitting components — so their probe is a
-        # 64-bit hash sum of the labels: equal sums across a round mean
-        # an unchanged label multiset up to a 2^-64-ish collision.
-        probe = (
-            F.col("component").cast("decimal(38,0)")
-            if numeric_ids
-            else F.xxhash64(F.col("component")).cast("decimal(38,0)")
-        )
-        row = lb.agg(
-            F.sum(probe).alias("s"), F.count(F.lit(1)).alias("n")
-        ).first()
-        return (row["s"], row["n"])
-
-    prev_sum = _label_sum(labels)
-    converged = False
-    try:
-        for _ in range(max_iter):
-            msgs = edges.join(
-                labels.withColumnRenamed("id", "src"), "src"
-            ).select(F.col("dst").alias("id"), "component")
-            new_labels = (
-                msgs.unionByName(labels)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-            )
-            # lazy: materialized by the convergence probe on the next line
-            new_labels = new_labels.localCheckpoint(eager=False)
-            new_sum = _label_sum(new_labels)
-            labels = new_labels
-            if new_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = new_sum
-    finally:
-        edges.unpersist()
-    if not converged:
-        # returning partially-propagated labels would silently split one
-        # true component into several "representatives" — fail loudly and
-        # let the caller raise max_iter (diameter > max_iter means the
-        # graph is chain-shaped, e.g. crawl mirror chains)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (graph diameter exceeds it)"
-        )
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star edge
-    rewrites (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round alternative to HashMin propagation for
-    graphs whose diameter is NOT small (crawl mirror chains, linked
-    citation runs), where O(diameter) rounds would dominate the job.
-
-    Per round: large-star points every vertex's larger neighbors at its
-    minimum neighbor, small-star re-hangs the smaller neighbors — each
-    is ONE shuffle of the edge set (a min-over-neighborhood window on
-    the vertex id — the reduce-over-neighborhood shape of the paper)
-    instead of the groupBy-min + equi-join pair, which at scale shuffles
-    the edges AND the per-vertex mins and sorts both for the merge;
-    edge count stays O(|E| + |V|), and the edge set converges to stars
-    rooted at each component's minimum id. Lineage is cut with a lazy
-    localCheckpoint per round, materialized by the convergence probe in
-    the same job — a constant-size fingerprint aggregate (count +
-    decimal sums + xxhash64 sum — no data-sized collect, no edge-diff
-    join). Same contract as :func:`connected_components`: returns
-    (id, component) for every vertex appearing in ≥1 pair, component =
-    minimum reachable id.
+    Labeling is one aggregate: the converged edges (leaf → root) plus a
+    (v → v) row for every non-null endpoint of ``pairs``, then the
+    minimum per id. So every non-null id that appears in a pair is
+    returned exactly once; a vertex whose only pairs are self-loops, or
+    whose partners are all NULL, is its own component; a NULL id adds no
+    edge and is never returned. Vertices in no pair are not returned
+    (singletons need no dedup decision).
     """
     from pyspark.sql import Window
 
     edges = (
-        pairs.where(F.col(id_a) != F.col(id_b))
+        pairs.where(F.col(id_a) != F.col(id_b))  # NULL ids and self-loops drop here
         .select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .distinct()
         .localCheckpoint(eager=False)  # materialized by the first fingerprint
-    )
-    vertices = (
-        pairs.select(F.col(id_a).alias("id"))
-        .unionByName(pairs.select(F.col(id_b).alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)  # materialized by the caller's action
     )
 
     numeric_ids = isinstance(
@@ -870,9 +779,6 @@ def connected_components_star(
     )
 
     def _fingerprint(e: DataFrame) -> tuple:
-        # the decimal endpoint sums sharpen the fingerprint for numeric
-        # ids; for string ids they would THROW under ANSI (or null out
-        # with it off), so those rely on count + the 64-bit pair-hash sum
         aggs = [
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
@@ -882,13 +788,8 @@ def connected_components_star(
                 F.sum(F.col("a").cast("decimal(38,0)")).alias("sa"),
                 F.sum(F.col("b").cast("decimal(38,0)")).alias("sb"),
             ]
-        row = e.agg(*aggs).first()
-        return tuple(row)
+        return tuple(e.agg(*aggs).first())
 
-    # per-vertex neighborhood minimum as a WINDOW over the edge rows —
-    # one exchange on the vertex id and every row carries its group's
-    # min, replacing the groupBy-min + join-back shape (two shuffles +
-    # a sort-merge at scale, a broadcast-build job per star locally)
     _w_min = F.min("b").over(Window.partitionBy("a"))
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -897,7 +798,6 @@ def connected_components_star(
             und.withColumn("m", F.least(_w_min, F.col("a")))
             .where(F.col("b") > F.col("a"))
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .distinct()
         )
 
     def _small_star(e: DataFrame) -> DataFrame:
@@ -908,31 +808,29 @@ def connected_components_star(
         hang = d.where(F.col("b") != F.col("m")).select(
             F.col("b").alias("a"), F.col("m").alias("b")
         )
-        # d carries one (a, m) per EDGE; the trailing distinct collapses
-        # the per-a duplicates the old groupBy produced exactly once
         return hang.unionByName(d.select("a", F.col("m").alias("b"))).distinct()
 
     prev = _fingerprint(edges)
-    converged = False
     for _ in range(max_iter):
         # lazy: materialized by the fingerprint probe on the next line
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
         cur = _fingerprint(edges)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if not converged:
+    else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter"
         )
-    labels = edges.select(F.col("a").alias("id"), F.col("b").alias("component")).unionByName(
-        edges.select(F.col("b").alias("id"), F.col("b").alias("component")).distinct()
+    ends = pairs.select(F.col(id_a).alias("id")).unionByName(
+        pairs.select(F.col(id_b).alias("id"))
     )
-    # self-loop-only vertices never enter the edge set — label them as
-    # their own component so the contract matches HashMin exactly
-    return vertices.join(labels, "id", "left").select(
-        "id", F.coalesce(F.col("component"), F.col("id")).alias("component")
+    return (
+        edges.select(F.col("a").alias("id"), F.col("b").alias("component"))
+        .unionByName(ends.where(F.col("id").isNotNull()).withColumn("component", F.col("id")))
+        .groupBy("id")
+        .agg(F.min("component").alias("component"))
     )
 
 

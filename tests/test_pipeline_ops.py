@@ -410,17 +410,38 @@ def test_connected_components_chain_and_clique(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_star_matches_hashmin(spark):
-    """Large-star/small-star CC agrees with HashMin propagation on
-    random graphs, long chains (where its O(log n) rounds matter),
-    cliques, self-loops, and the empty graph — exact label parity,
-    not just partition parity (both label with the component min)."""
+def _union_find_components(edges):
+    """Plain-Python reference for connected_components: every non-null
+    id in a pair, labeled with the minimum id reachable from it."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for v in (a, b):
+            if v is not None:
+                parent.setdefault(v, v)
+    for a, b in edges:
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def test_connected_components_matches_union_find(spark):
+    """Star-round CC agrees with a union-find reference on random
+    graphs, long chains in both orientations (a reversed 40-chain is
+    past any O(diameter)-round budget of 20), cliques, self-loops,
+    duplicate and reversed pairs, string ids, null ids and the empty
+    graph — exact labels, one row per vertex."""
     import random
 
-    from parquetranger_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from parquetranger_spark.operators.dedup import connected_components
 
     cases = []
     for seed, n, m in [(1, 40, 25), (2, 60, 80), (3, 30, 12), (4, 50, 50)]:
@@ -428,52 +449,57 @@ def test_connected_components_star_matches_hashmin(spark):
         cases.append(
             [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         )
-    # long chain: diameter 15 — star resolves in ~log rounds
     cases.append([(i, i + 1) for i in range(15)])
+    cases.append([(i + 1, i) for i in range(40)])
     # self-loops only + a mixed component
     cases.append([(7, 7), (8, 8), (1, 2), (2, 2)])
+    cases.append([(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (3, 2)])
     for edges in cases:
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        ref = {r.id: r.component for r in connected_components(pairs).collect()}
-        got_rows = connected_components_star(pairs).collect()
+        got_rows = connected_components(pairs).collect()
         got = {r.id: r.component for r in got_rows}
         assert len(got_rows) == len(got), "duplicate vertex labels"
-        assert got == ref
+        assert got == _union_find_components(edges)
+
+    words = [("b", "a"), ("c", "b"), ("d", "c"), ("y", "x"), ("z", "z")]
+    pairs = spark.createDataFrame(words, "id_a string, id_b string")
+    got = {r.id: r.component for r in connected_components(pairs).collect()}
+    assert got == _union_find_components(words)
+    assert got["d"] == "a"
+
+    # a NULL id adds no edge and is never returned; its partner is kept
+    nulls = [(1, None), (2, 3), (None, None), (4, 4), (5, None), (5, 6)]
+    pairs = spark.createDataFrame(nulls, "id_a long, id_b long")
+    got_rows = sorted(tuple(r) for r in connected_components(pairs).collect())
+    assert got_rows == [(1, 1), (2, 2), (3, 2), (4, 4), (5, 5), (6, 5)]
+
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(empty).count() == 0
+    assert connected_components(empty).count() == 0
 
 
 def test_cc_round_job_budget(spark):
-    """Job-count tripwire for the CC loops (round-11 optimization): a
-    round materializes its checkpoint INSIDE the convergence-probe job
-    (lazy localCheckpoint) and each star step is ONE window shuffle, so
-    a star round costs ~6 jobs (AQE stage jobs included) and a HashMin
-    round ~4. A reappearing eager-checkpoint job or a groupBy+join-back
-    star step shows up here as a per-round job-count jump."""
-    from parquetranger_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """Job-count tripwire for the CC rounds: a round materializes its
+    checkpoint INSIDE the convergence-probe job (lazy localCheckpoint),
+    each star step is ONE window shuffle and only small-star ends in a
+    distinct, so a round costs 5 jobs (AQE stage jobs included). A
+    reappearing eager-checkpoint job, a groupBy+join-back star step or
+    a dropped distinct coming back shows up here as a job-count jump."""
+    from parquetranger_spark.operators.dedup import connected_components
 
     sc = spark.sparkContext
-    # diameter 11: inside HashMin's default max_iter, >3 star rounds
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     ).localCheckpoint(eager=True)
 
-    sc.setJobGroup("cc_star_budget", "star CC job budget")
-    star = {r.id: r.component for r in connected_components_star(pairs).collect()}
-    sc.setJobGroup("cc_hashmin_budget", "HashMin CC job budget")
-    hm = {r.id: r.component for r in connected_components(pairs).collect()}
+    sc.setJobGroup("cc_budget", "CC job budget")
+    got = {r.id: r.component for r in connected_components(pairs).collect()}
     sc.setJobGroup("cc_budget_done", "")
-    assert star == hm == {i: 0 for i in range(13)}
+    assert got == {i: 0 for i in range(13)}
 
-    star_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_star_budget"))
-    hm_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_hashmin_budget"))
-    # a 13-chain converges in ~6 star rounds (measured 39 jobs, ~6.5/round) / ≤13 HashMin rounds; budgets
-    # hold headroom for ±1 round and a couple of AQE replans, no more
-    assert star_jobs <= 48, f"star CC fired {star_jobs} jobs on a 13-chain"
-    assert hm_jobs <= 60, f"HashMin CC fired {hm_jobs} jobs on a 13-chain"
+    jobs = len(sc.statusTracker().getJobIdsForGroup("cc_budget"))
+    # a 13-chain converges in 5 star rounds: measured 29 jobs; the
+    # budget holds one more round (5 jobs), no more
+    assert jobs <= 34, f"CC fired {jobs} jobs on a 13-chain"
 
 
 def test_connected_components_raises_when_unconverged(spark):

@@ -47,6 +47,12 @@ def test_sixteen_process_writer_mixed_soak(spark, tmp_path_factory):
     facts.extend(_df(spark, [("seed", "S", 0.0)]))
     summary.extend(_df(spark, [("seed", "S", 0.0)]))
 
+    # the suite's session JVM keeps the heap earlier tests grew (GBs under
+    # the default 16g cap); a full GC hands the free part back to the OS
+    # before sixteen more JVMs start, or the kernel's OOM killer takes the
+    # session JVM on a 15 GB host and every later test loses py4j
+    spark.sparkContext._jvm.System.gc()
+
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
     env["PYTHONPATH"] = repo_root + os.pathsep + env.get("PYTHONPATH", "")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from parquetranger_spark.operators.curation import budget_select, repetition_stats  # noqa: E402
 from parquetranger_spark.operators.dedup import (  # noqa: E402
-    connected_components_star,
+    connected_components,
     exact_dedup,
     incremental_near_dedup,
     minhash_index,
@@ -66,9 +66,9 @@ def probe(spark):
     # state — the r9 number (176 s at 10x vs r8's 53 s, code unchanged)
     # was measured AFTER the grown-index builds, whose setup-era
     # checkpoints are pinned in keep_ids for the whole probe. Clean
-    # fresh-session re-measures (tools/cc_probe_standalone.py, CC_STAR_
-    # r10) read 51-78 s at 10x, exponent ≈ 0.35 — matching r8. Star CC
-    # on a pathological CHAIN (diameter = n — HashMin's worst case):
+    # fresh-session re-measures (CC_STAR_r10) read 51-78 s at 10x,
+    # exponent ≈ 0.35 — matching r8. Star CC on a pathological CHAIN
+    # (diameter = n, the worst case for label propagation):
     # rounds grow ~log2(n) (11/15/18 at 1e3/1e4/1e5 vertices), so the
     # exponent reads ≈ 0.3-0.45 locally (per-round overhead × log n
     # rounds — NOT ≈0: each round's fixed cost never shrinks), which is
@@ -77,7 +77,7 @@ def probe(spark):
     for f in FACTORS:
         t0 = time.monotonic()
         (
-            connected_components_star(
+            connected_components(
                 spark.range(100_000 * f - 1).select(
                     F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
                 ),

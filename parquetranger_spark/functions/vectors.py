@@ -6,18 +6,18 @@ summation), and dot products are sequential left folds — the exact shape
 the DuckDB oracle mirrors, making similarity values bit-identical across
 engines.
 
-The scoring entry points (:func:`dot`, :func:`norm`, :func:`cosine`,
-:func:`cosine_prenormed`) evaluate as Arrow-batched pandas UDFs: Catalyst
-higher-order functions (``zip_with``/``aggregate``) have no codegen and
-run INTERPRETED — each candidate pair in a top-k join pays ~3·dim
-interpreted expression nodes (guide §4.2: hand whole batches to
-vectorized native code instead). The numpy kernels vectorize ACROSS ROWS
-while keeping every reduction SEQUENTIAL ACROSS DIMENSIONS — each float64
-multiply/add happens in the exact order the Catalyst fold defines, and
-IEEE-754 ops are deterministic given order, so the scores are
-BIT-IDENTICAL to the interpreted folds (and to the DuckDB oracle). The
-``*_expr`` twins keep the pure Column forms for callers that must stay
-JVM-only (constant-folded plane literals, codegen-only surfaces).
+The per-pair scoring entry points (:func:`dot`, :func:`cosine_prenormed`)
+evaluate as Arrow-batched pandas UDFs: Catalyst higher-order functions
+(``zip_with``/``aggregate``) have no codegen and run INTERPRETED — each
+candidate pair in a top-k join pays ~3·dim interpreted expression nodes
+(guide §4.2: hand whole batches to vectorized native code instead).
+The numpy kernels vectorize ACROSS ROWS while keeping every reduction
+SEQUENTIAL ACROSS DIMENSIONS — each float64 multiply/add happens in the
+exact order the Catalyst fold defines, and IEEE-754 ops are
+deterministic given order, so the scores are BIT-IDENTICAL to the
+interpreted folds (and to the DuckDB oracle). The ``*_expr`` twins keep
+the pure Column forms for callers that must stay JVM-only
+(constant-folded plane literals, codegen-only surfaces).
 """
 
 from __future__ import annotations
@@ -117,6 +117,23 @@ def _fold_cos(Q, C):
         return acc / (qn[:, None] * cn[None, :])
 
 
+def _probe_order(Q, C, lids, n: int):
+    """(nq × dim) queries, (m × dim) centroids and their m list ids →
+    (nq × min(n, m)) list ids per query, nearest first: centroid cosine
+    (:func:`_fold_cos`) descending, an undefined cosine (null or ragged
+    query, NaN element, zero norm) after every real one, ties by list
+    id. The one probe ranking of every IVF path, driver- or
+    executor-side."""
+    import numpy as np
+
+    lids = np.asarray(lids)
+    cos = _fold_cos(Q, C)
+    # numpy sorts NaN after every number and NaNs as equal, so undefined
+    # cosines come last and fall through to the list-id key
+    order = np.lexsort((np.broadcast_to(lids, cos.shape), -cos))
+    return lids[order[:, :n]]
+
+
 def _row_dot(a, b):
     """Exact scalar fallback (ragged/null rows) — mirrors zip_with +
     aggregate: length mismatch or a null element → None."""
@@ -172,50 +189,9 @@ def norm(a: Column) -> Column:
     rides inside every lifecycle commit's write job — an Arrow version
     adds a Python stage to each tiny write for work the interpreter does
     in ms at any batch size, and measured +1-2 s on the add()-per-batch
-    ANN ingest lifecycle. The per-PAIR folds (:func:`dot`,
-    :func:`cosine`) are the ones that scale with candidate volume and go
-    through Arrow."""
+    ANN ingest lifecycle. The per-PAIR fold (:func:`dot`) is the one that
+    scales with candidate volume and goes through Arrow."""
     return norm_expr(a)
-
-
-def _series_cos(sa, sb):
-    import numpy as np
-    import pandas as pd
-
-    av, bv = sa.to_numpy(), sb.to_numpy()
-    if not len(av):
-        return pd.Series([], dtype="float64")
-    na_mask = sa.isna().to_numpy() | sb.isna().to_numpy()
-    if not na_mask.any():
-        A, B = _mat(av), _mat(bv)
-        if A is not None and B is not None and A.shape == B.shape:
-            return pd.Series(
-                _fold_dot(A, B) / (np.sqrt(_fold_dot(A, A)) * np.sqrt(_fold_dot(B, B)))
-            )
-    import math
-
-    out = []
-    for x, y in zip(av, bv):
-        d, dx, dy = _row_dot(x, y), _row_dot(x, x), _row_dot(y, y)
-        out.append(
-            None
-            if d is None or dx is None or dy is None
-            else d / (math.sqrt(dx) * math.sqrt(dy))
-        )
-    return pd.Series(out, dtype="object").astype("float64")
-
-
-_COS_UDF = None
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two (float) vectors, computed in double —
-    one Arrow crossing for cast + dot + norms; the division happens in
-    numpy (IEEE — identical bits to the JVM divide)."""
-    global _COS_UDF
-    if _COS_UDF is None:
-        _COS_UDF = F.pandas_udf(_series_cos, "double")
-    return _COS_UDF(a, b)
 
 
 def cosine_prenormed(a_d: Column, b_d: Column, na: Column, nb: Column) -> Column:
@@ -223,7 +199,7 @@ def cosine_prenormed(a_d: Column, b_d: Column, na: Column, nb: Column) -> Column
     cast and the norm once per input row BEFORE a join, so each candidate
     pair pays one dot fold instead of two casts + two norm folds.
     ``dot/(na*nb)`` performs the same double ops in the same order as
-    :func:`cosine`, so results are bit-identical; the division runs in
+    :func:`_fold_cos`, so results are bit-identical; the division runs in
     the JVM (one codegen'd double op). A zero norm scores NULL
     (``try_divide``) instead of raising ``DIVIDE_BY_ZERO`` under ANSI."""
     return F.try_divide(dot(a_d, b_d), na * nb)

@@ -15,20 +15,24 @@ vector surface at all):
   so a query batch's probed lists prune at the file level — a scan of
   n_probe/n_lists of the corpus, decided from the manifest without
   touching data files.
-- **build** — seeded distributed k-means (bounded training prefix, same
-  device as :func:`.similarity.topk_cosine_ivf`) assigns every vector a
-  list; vectors land pre-normalized (norm stored alongside) so query
-  time never recomputes corpus norms. ``n_lists`` defaults to ≈√n, the
-  IVF balance that keeps probe cost sub-quadratic as the corpus grows.
+- **build** — a seeded driver-side k-means fit on a bounded training
+  sample (:func:`.similarity.fit_coarse_centroids`, the same device as
+  :func:`.similarity.topk_cosine_ivf`) gives the centroids, and a
+  broadcast argmin assigns every vector a list; vectors land
+  pre-normalized (norm stored alongside) so query time never recomputes
+  corpus norms. ``n_lists`` defaults to ≈√n, the IVF balance that
+  keeps probe cost sub-quadratic as the corpus grows.
 - **add** — new vectors route to their nearest EXISTING centroid
   (broadcast argmin — one narrow pass, no re-train, no shuffle of old
   data) and append through the normal commit path: an index refresh is
   O(batch), and concurrent adds compose like any TableRepo append.
 - **delete** — deletion-vector tombstones on the postings table
   (O(deleted keys), no list rewrite).
-- **query** — rank centroids per query (broadcast), probe the top
-  ``n_probe`` lists, equi-join ONLY those partitions, exact cosine +
-  per-query top-k via a rank window (WindowGroupLimit — no global sort).
+- **query** — rank centroids per query on the driver from the
+  collected query batch (:func:`..functions.vectors._probe_order`),
+  probe the top ``n_probe`` lists, equi-join ONLY those partitions,
+  exact cosine + per-query top-k via :func:`.similarity._rank_topk`
+  (a rank window, WindowGroupLimit — no global sort).
 
 Periodic ``maintain()`` on the postings repo compacts lists fragmented
 by many small adds — the same maintenance story as any table here.
@@ -43,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_prenormed, norm, to_double
 from ..sources.table_repo import TableRepo
+from .similarity import _rank_topk
 
 # codebooks are EPOCH-stamped: a retrain publishes epoch e+1 alongside
 # epoch e, re-encodes posting partitions in bounded batches (each row
@@ -1159,12 +1164,10 @@ class AnnIndex:
         # ADC: Σ_j lut[j][code_j] — the same sequential left fold the old
         # zip_with+aggregate expression evaluated (bit-identical), as one
         # Arrow batch + numpy gather per subspace (see similarity._adc_udf)
+        adc_cols = [F.col("query_id"), F.col("pq")]
         if multi_epoch:
-            adc = _adc_udf(lut_bc, epoch_luts=True)(
-                F.col("query_id"), F.col("pq_epoch"), F.col("pq")
-            )
-        else:
-            adc = _adc_udf(lut_bc)(F.col("query_id"), F.col("pq"))
+            adc_cols.append(F.col("pq_epoch"))
+        adc = _adc_udf(lut_bc)(*adc_cols)
         wa = Window.partitionBy("query_id").orderBy(
             F.col("adc").desc(), F.col("neighbor_id")
         )
@@ -1198,10 +1201,7 @@ class AnnIndex:
             ]
             vecs = vecs.where(F.col(self.id_col).isin(cand_ids))
         vecs = vecs.select(F.col(self.id_col).alias("neighbor_id"), "cv", "cn")
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), F.col("neighbor_id")
-        )
-        return (
+        scored = (
             short.join(vecs, "neighbor_id")
             .join(qloc, "query_id")
             .select(
@@ -1211,10 +1211,8 @@ class AnnIndex:
                     F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
                 ).alias("cos"),
             )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos")
         )
+        return _rank_topk(scored, k)
 
     def _probe_rows(self, q_rows: list, n_probe: int) -> list:
         """Driver-side probe ranking: for each collected (query_id, qv)
@@ -1225,31 +1223,30 @@ class AnnIndex:
         centroid cosines here — bounded by the index, never the data —
         replaces a crossJoin + window + eager localCheckpoint + a
         probed-id distinct collect (3 jobs per serve round, guide §1.2).
-        The cosines are one |queries| × n_lists matrix fold
-        (:func:`~..functions.vectors._fold_cos`), bit-identical to the
-        sequential float64 fold the Catalyst/Arrow expression evaluates,
-        and the order is (c_cos DESC, list_id) with the exact top-k
-        policy: an undefined cosine (null or ragged query, NaN element,
-        zero norm) ranks after every real one, ties by list_id.
-        Returns [(query_id, qv, qn, [list_id, ...])] with qn computed by
-        the same fold as the ``norm`` column it replaces (NaN for a null
-        or ragged query, whose every cosine is undefined)."""
+        The ranking is :func:`~..functions.vectors._probe_order`, the
+        same kernel :func:`.similarity.topk_cosine_ivf` runs on the
+        executors: centroid cosine descending, an undefined cosine
+        (null or ragged query, NaN element, zero norm) after every real
+        one, ties by list_id. Returns [(query_id, qv, qn, [list_id,
+        ...])] with qn computed by the same fold as the ``norm`` column
+        it replaces (NaN for a null or ragged query, whose every cosine
+        is undefined)."""
         import numpy as np
 
-        from ..functions.vectors import _fold_cos, _fold_dot, _rows_mat
+        from ..functions.vectors import _fold_dot, _probe_order, _rows_mat
 
         cents = self._centroid_pairs()
         dim = len(cents[0][1]) if cents else 0
-        lids = np.array([lid for lid, _ in cents], dtype=np.int64)
         Q = _rows_mat([qv for _, qv in q_rows], dim)
-        cos = _fold_cos(Q, _rows_mat([c for _, c in cents], dim))
-        undef = np.isnan(cos)
-        order = np.lexsort(
-            (np.broadcast_to(lids, cos.shape), np.where(undef, 0.0, -cos), undef)
-        )[:, :n_probe]
+        order = _probe_order(
+            Q,
+            _rows_mat([c for _, c in cents], dim),
+            np.array([lid for lid, _ in cents], dtype=np.int64),
+            n_probe,
+        )
         qn = np.sqrt(_fold_dot(Q, Q))
         return [
-            (qid, qv, float(qn[i]), lids[order[i]].tolist())
+            (qid, qv, float(qn[i]), order[i].tolist())
             for i, (qid, qv) in enumerate(q_rows)
         ]
 
@@ -1282,18 +1279,13 @@ class AnnIndex:
         cand = probes.join(inv, "list_id")
         if exclude_self:
             cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), F.col("neighbor_id")
-        )
-        return (
+        return _rank_topk(
             cand.select(
                 "query_id",
                 "neighbor_id",
                 cosine_prenormed(
                     F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
                 ).alias("cos"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cos")
+            ),
+            k,
         )

@@ -17,7 +17,7 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, hyperplane_bits
+from ..functions.vectors import hyperplane_bits
 
 
 def default_planes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
@@ -31,6 +31,23 @@ def default_planes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[fl
 # into blocks of at most this many bytes, each scored in its own
 # corpus pass
 _QUERY_BLOCK_BYTES = 256 << 20
+
+# per-matrix cap inside the kernel: an Arrow batch is scored in corpus
+# chunks so that no (query group × chunk) float64 matrix exceeds this
+_KERNEL_MATRIX_BYTES = 64 << 20
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every top-k path ends with: per query, the top
+    ``k`` of ``(query_id, neighbor_id, cos)`` rows by (cos desc,
+    neighbor_id) — a NULL cos ranks after every real one — returned as
+    (query_id, neighbor_id, rank, cos)."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos")
+    )
 
 
 def topk_cosine_bruteforce(
@@ -47,9 +64,13 @@ def topk_cosine_bruteforce(
     through a mapInPandas kernel that scores every (query, candidate)
     cell of a batch and emits a per-batch candidate superset; a
     per-query window with the (cos desc, neighbor_id) order decides the
-    final ranks. A query matrix over ``_QUERY_BLOCK_BYTES`` (256 MB) is
-    cut into blocks of at most that size, each scored in its own corpus
-    pass; the candidates are unioned before the one window.
+    final ranks (:func:`_rank_topk`). A query matrix over
+    ``_QUERY_BLOCK_BYTES`` (256 MB) is cut into blocks of at most that
+    size, each scored in its own corpus pass; the candidates are unioned
+    before the one window. Inside the kernel each Arrow batch is scored
+    in corpus chunks so that no (query group × chunk) matrix exceeds
+    ``_KERNEL_MATRIX_BYTES`` (64 MB); a group too wide for that scores
+    one corpus row at a time.
 
     Scores are BIT-IDENTICAL to the Catalyst fold: float64 products
     accumulate in ascending dimension order and divide by the same
@@ -89,6 +110,7 @@ def topk_cosine_bruteforce(
     rows = [(r["query_id"], r["qv"]) for r in q.collect()]
     sc = corpus.sparkSession.sparkContext
     kk = max(int(k), 1)
+    cap = _KERNEL_MATRIX_BYTES
     fold_cos, rows_mat = _fold_cos, _rows_mat  # closure-captured (module
     # is cloudpickle-registered by value: no repo on executor sys.path)
 
@@ -107,24 +129,27 @@ def topk_cosine_bruteforce(
                 # undefined cells order by neighbor id: its rank in the batch
                 nrank = _np.empty(m)
                 nrank[_np.argsort(nids, kind="stable")] = _np.arange(m)
-                take = min(kk, m)
                 for qids, Q in groups:
-                    cos = fold_cos(Q, rows_mat(cvs, Q.shape[1]))
-                    # one sort key per cell: real scores by -cos (a -inf
-                    # cos clamps to just past the finite ones), then the
-                    # undefined cells by neighbor id, self-pairs last
-                    undef = _np.isnan(cos)
-                    key = _np.where(undef, _np.inf, -cos)
-                    top = _np.max(key, where=_np.isfinite(key), initial=0.0)
-                    key = _np.where(undef, top + 2.0 + nrank, _np.minimum(key, top + 1.0))
-                    key[qids[:, None] == nids[None, :]] = _np.inf
-                    # boundary ties all pass: a superset, ranked by the window
-                    kth = _np.partition(key, take - 1, axis=1)[:, take - 1, None]
-                    qi, ci = _np.nonzero((key <= kth) & (key < _np.inf))
-                    if len(qi):
-                        yield _pd.DataFrame(
-                            {"query_id": qids[qi], "neighbor_id": nids[ci], "cos": cos[qi, ci]}
-                        )
+                    step = max(1, cap // (8 * max(len(qids), 1)))
+                    for lo in range(0, m, step):
+                        ids, rank = nids[lo : lo + step], nrank[lo : lo + step]
+                        cos = fold_cos(Q, rows_mat(cvs[lo : lo + step], Q.shape[1]))
+                        # one sort key per cell: real scores by -cos (a -inf
+                        # cos clamps to just past the finite ones), then the
+                        # undefined cells by neighbor id, self-pairs last
+                        undef = _np.isnan(cos)
+                        key = _np.where(undef, _np.inf, -cos)
+                        top = _np.max(key, where=_np.isfinite(key), initial=0.0)
+                        key = _np.where(undef, top + 2.0 + rank, _np.minimum(key, top + 1.0))
+                        key[qids[:, None] == ids[None, :]] = _np.inf
+                        # boundary ties all pass: a superset, ranked by the window
+                        take = min(kk, len(ids))
+                        kth = _np.partition(key, take - 1, axis=1)[:, take - 1, None]
+                        qi, ci = _np.nonzero((key <= kth) & (key < _np.inf))
+                        if len(qi):
+                            yield _pd.DataFrame(
+                                {"query_id": qids[qi], "neighbor_id": ids[ci], "cos": cos[qi, ci]}
+                            )
 
         return _score
 
@@ -132,13 +157,7 @@ def topk_cosine_bruteforce(
         c.mapInPandas(_kernel(_ship(sc, blk, nbytes)), out_schema)
         for blk, nbytes in _query_blocks(rows, _QUERY_BLOCK_BYTES)
     ]
-    cand = reduce(DataFrame.unionAll, parts)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(reduce(DataFrame.unionAll, parts), k)
 
 
 def _query_blocks(rows: list, cap: int) -> list:
@@ -260,8 +279,7 @@ def topk_cosine_lsh(
     cvec = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    scored = (
         cands.join(qvec, "query_id")
         .join(cvec, "neighbor_id")
         .select(
@@ -269,10 +287,8 @@ def topk_cosine_lsh(
             "neighbor_id",
             cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
     )
+    return _rank_topk(scored, k)
 
 
 # closure-vs-broadcast cutover for numpy tables captured by scoring UDFs:
@@ -521,68 +537,45 @@ def _lut_rows(qv, books):
     )
 
 
-def _adc_udf(lut_bc, epoch_luts: bool = False):
+def _adc_udf(lut_bc):
     """Arrow-batched ADC scorer: Σ_j lut[j][code_j] as the SAME sequential
     left fold the old ``aggregate(zip_with(codes, lut, …))`` expression
     evaluated per pair (float64 adds in ascending-j order → bit-identical),
     vectorized across rows with one fancy-indexed gather per subspace.
-    ``lut_bc`` is {query_id: (m × n_codes) ndarray} (or
-    {(query_id, epoch): …} with ``epoch_luts``), shipped via
-    :func:`_ship` — sc.broadcast past the size cutover, task closure
-    below it (guide §4.5)."""
+    Called as ``udf(query_id, codes)`` with ``lut_bc`` =
+    {query_id: (m × n_codes) ndarray}, or as ``udf(query_id, codes,
+    epoch)`` with {(query_id, epoch): …}; shipped via :func:`_ship` —
+    sc.broadcast past the size cutover, task closure below it (guide
+    §4.5)."""
 
-    def _score(Q, C, lut):
+    def _score(keys, C, lut):
         import numpy as np
+        import pandas as _pd
 
-        out = np.empty(len(Q), dtype=np.float64)
-        # small, bounded distinct-query loop; each iteration is one
-        # vectorized gather+add chain over that query's candidate rows
-        for key in set(Q.tolist()):
-            m = Q == key
+        out = np.empty(len(C), dtype=np.float64)
+        # small, bounded distinct-key loop; each iteration is one
+        # vectorized gather+add chain over that key's candidate rows
+        frame = _pd.DataFrame(dict(enumerate(keys)))
+        by = 0 if len(keys) == 1 else list(frame.columns)
+        for key, rows in frame.groupby(by, sort=False, dropna=False).indices.items():
             L = lut[key]
-            Cg = C[m]
-            acc = np.zeros(Cg.shape[0], dtype=np.float64)
+            Cg = C[rows]
+            acc = np.zeros(len(rows), dtype=np.float64)
             for j in range(L.shape[0]):
                 acc = acc + L[j, Cg[:, j]]
-            out[m] = acc
+            out[rows] = acc
         return out
 
-    if epoch_luts:
-
-        def _adc(qids, epochs, codes):
-            import numpy as np
-            import pandas as _pd
-
-            if not len(qids):
-                return _pd.Series([], dtype="float64")
-            lut = lut_bc.value if hasattr(lut_bc, "value") else lut_bc
-            Q = qids.to_numpy()
-            E = epochs.to_numpy()
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in codes.to_numpy()])
-            out = np.empty(len(Q), dtype=np.float64)
-            keys = {(q, int(e)) for q, e in zip(qids.tolist(), epochs.tolist())}
-            for qk, ek in keys:
-                m = (Q == qk) & (E == ek)
-                L = lut[(qk, ek)]
-                Cg = C[m]
-                acc = np.zeros(Cg.shape[0], dtype=np.float64)
-                for j in range(L.shape[0]):
-                    acc = acc + L[j, Cg[:, j]]
-                out[m] = acc
-            return _pd.Series(out)
-
-        return F.pandas_udf(_adc, "double")
-
-    def _adc(qids, codes):
+    def _adc(qids, codes, epochs=None):
         import numpy as np
         import pandas as _pd
 
         if not len(qids):
             return _pd.Series([], dtype="float64")
         lut = lut_bc.value if hasattr(lut_bc, "value") else lut_bc
-        Q = qids.to_numpy()
+        keys = [qids.to_numpy()] if epochs is None else [qids.to_numpy(), epochs.to_numpy()]
         C = np.stack([np.asarray(c, dtype=np.int64) for c in codes.to_numpy()])
-        return _pd.Series(_score(Q, C, lut))
+        return _pd.Series(_score(keys, C, lut))
 
     return F.pandas_udf(_adc, "double")
 
@@ -676,8 +669,7 @@ def topk_cosine_pq(
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    scored = (
         cands.select("query_id", "neighbor_id")
         .join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
@@ -686,10 +678,8 @@ def topk_cosine_pq(
             "neighbor_id",
             cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
     )
+    return _rank_topk(scored, k)
 
 
 def knn_density_ivf(
@@ -832,27 +822,31 @@ def topk_cosine_ivf(
 
     ``scoring_width``: optional explicit repartition of the probe frame
     before the candidate join. The scoring stage's width otherwise comes
-    from AQE's byte-based coalescing of the probe window's exchange —
-    but candidate scoring costs |probes|·(list size)·dim flops, so a
-    byte-tiny local corpus scores everything in 1-2 tasks. Callers that
-    measured their input narrow pass the cluster parallelism; leave None
-    at scale (the window exchange is already wide there and an extra
-    shuffle would be waste).
+    from the query scan and AQE's byte-based coalescing of the
+    candidate join's exchanges — but candidate scoring costs
+    |probes|·(list size)·dim flops, so a byte-tiny local corpus scores
+    everything in 1-2 tasks. Callers that measured their input narrow
+    pass the cluster parallelism; leave None at scale (the scan is
+    already wide there and an extra shuffle would be waste).
 
     Scale shape: the quantizer fits on a bounded corpus sample — ONE
     collect of ``train_limit × dim`` doubles, then a seeded driver-side
     Lloyd (:func:`fit_coarse_centroids`; the pyspark.ml KMeans this
     replaces spent ~7 distributed jobs fitting the same bounded sample).
-    Centroids are tiny (n_lists × dim) and broadcast; list assignment is
-    one shuffle-free broadcast-argmin projection
-    (:func:`nearest_centroid_col`); the search joins queries to corpus
-    rows on ``list_id`` — a shuffle-bounded equi-join touching
-    |corpus| · n_probe / n_lists rows per query on average, never a full
-    cross join. Exact cosine + window rank within the probed candidates.
+    Centroids are tiny (n_lists × dim) and shipped to the executors;
+    list assignment is one shuffle-free broadcast-argmin projection
+    (:func:`nearest_centroid_col`), and each query's ``n_probe`` lists
+    come from one Arrow pass over the query vectors
+    (:func:`~..functions.vectors._probe_order`, exploded to one row per
+    probe). The search joins queries to corpus rows on ``list_id`` — a
+    shuffle-bounded equi-join touching |corpus| · n_probe / n_lists rows
+    per query on average, never a full cross join — then exact cosine
+    and :func:`_rank_topk` within the probed candidates.
     """
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    import numpy as np
 
-    spark = corpus.sparkSession
+    from ..functions.vectors import _probe_order, _rows_mat, cosine_prenormed, norm, to_double
+
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
     ).withColumn("cn", norm(F.col("cv")))
@@ -872,27 +866,35 @@ def topk_cosine_ivf(
         "neighbor_id", "cv", "cn", "list_id"
     )
 
-    cents = [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centers)]
-    cents_df = spark.createDataFrame(cents, "list_id int, centroid array<double>")
+    # probe ranking: one Arrow pass over the query vectors against the
+    # centroid table, shipped by size (_ship)
+    C = np.asarray(centers, dtype=np.float64)
+    table = _ship(corpus.sparkSession.sparkContext, C, C.nbytes)
+    probe_order, rows_mat = _probe_order, _rows_mat  # closure-captured
+
+    def _probes(qvs):
+        import numpy as _np
+        import pandas as _pd
+
+        Cm = table.value if hasattr(table, "value") else table
+        lids = _np.arange(len(Cm), dtype=_np.int32)
+        order = probe_order(rows_mat(qvs.to_numpy(), Cm.shape[1]), Cm, lids, n_probe)
+        return _pd.Series(list(order), dtype=object)
+
     q = queries.select(
         F.col(id_col).alias("query_id"), to_double(F.col(vec_col)).alias("qv")
     ).withColumn("qn", norm(F.col("qv")))
-    wq = Window.partitionBy("query_id").orderBy(F.col("c_cos").desc(), F.col("list_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents_df))
-        .select(
-            "query_id", "qv", "qn", "list_id", cosine(F.col("qv"), F.col("centroid")).alias("c_cos")
-        )
-        .withColumn("__pr", F.row_number().over(wq))
-        .where(F.col("__pr") <= n_probe)
-        .select("query_id", "qv", "qn", "list_id")
+    probes = q.select(
+        "query_id",
+        "qv",
+        "qn",
+        F.explode(F.pandas_udf(_probes, "array<int>")(F.col("qv"))).alias("list_id"),
     )
     if scoring_width and scoring_width > 1:
         # user-specified partitioning: AQE keeps it, so the candidate
         # join's scoring stage runs this wide (see docstring)
         probes = probes.repartition(int(scoring_width), "query_id")
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    scored = (
         probes.join(inv, "list_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -900,7 +902,5 @@ def topk_cosine_ivf(
             "neighbor_id",
             cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
     )
+    return _rank_topk(scored, k)

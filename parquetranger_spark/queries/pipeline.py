@@ -710,8 +710,8 @@ def stream_events_hourly(spark, sf_dir):
     oracle=_topk_oracle("vec_id >= 100 AND vec_id < 150", 5),
 )
 def topk_cosine_ivf_q(spark, sf_dir):
-    """X3 scale path, IVF flavor: k-means coarse quantizer (pyspark.ml,
-    seeded) → inverted-list probe join → exact-cosine rank. Verified per
+    """X3 scale path, IVF flavor: seeded driver-side k-means coarse
+    quantizer → inverted-list probe join → exact-cosine rank. Verified per
     gate run: recall ≥ 0.7 vs brute force asserted in-query, exact top-k
     emitted (SQL-reproducible — see _ann_verified_exact)."""
     from ..operators.similarity import topk_cosine_ivf

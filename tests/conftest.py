@@ -18,6 +18,20 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _spark_jvm_alive():
+    """Stop the run as soon as the session's JVM has died: every later
+    test would otherwise wait out a py4j connection timeout and fail.
+    The test during which it died has already failed on its own."""
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    proc = getattr(gw, "proc", None) if SparkContext._active_spark_context else None
+    code = proc.poll() if proc is not None else None
+    if code is not None:
+        pytest.exit(f"the Spark session's JVM exited with code {code}", returncode=1)
+
+
 @pytest.fixture()
 def tmp_root(tmp_path):
     return str(tmp_path)

@@ -1,6 +1,8 @@
 """Persisted IVF index (operators/ann_index.py): build / incremental add
 / dv-delete / probed query, plus the partition-pruned-scan plan gate."""
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -47,6 +49,90 @@ def test_query_zero_norm_query_vector(spark, idx):
     assert all(r[3] is None for r in got)
     assert [r[1] for r in got] == sorted(r[1] for r in got)
     assert idx._probe_rows([(999, [0.0] * 8)], 3)[0][3] == [0, 1, 2]
+
+
+def _ref_cos(a, b):
+    # plain-Python fold: acc = acc + x*y in dimension order; None when a
+    # vector is null, the lengths differ or the result is NaN
+    if a is None or b is None or len(a) != len(b):
+        return None
+
+    def fold(u, v):
+        acc = 0.0
+        for x, y in zip(u, v):
+            acc = acc + x * y
+        return acc
+
+    den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
+    v = fold(a, b) / den if den else math.nan
+    return None if math.isnan(v) else v
+
+
+def test_probe_order_matches_python_sort():
+    # nearest first by centroid cosine, undefined cosines last, ties by
+    # list id: the one probe ranking of AnnIndex and topk_cosine_ivf
+    from parquetranger_spark.functions.vectors import _probe_order, _rows_mat
+
+    cents = [
+        (7, [1.0, 0.0, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+        (5, [0.0, 0.0, 0.0]),  # zero norm: every cosine undefined
+        (1, [1.0, 0.0, 0.0]),  # duplicate of list 7: exact tie
+        (9, [1.0, 1.0, -1.0]),
+        (2, [-2.0, 0.5, 0.25]),
+    ]
+    queries = [
+        [1.0, 0.0, 0.0],
+        [0.0, 0.0, 1.0],  # cos 0.0 against lists 7, 3 and 1
+        [math.nan, 1.0, 0.0],  # NaN element
+        None,  # null query
+        [1.0, 2.0],  # ragged
+        [2.0, 2.0, -2.0],
+    ]
+    C = _rows_mat([c for _, c in cents], 3)
+    lids = np.array([lid for lid, _ in cents])
+    for n in (1, 3, len(cents), len(cents) + 2):
+        got = _probe_order(_rows_mat(queries, 3), C, lids, n).tolist()
+        want = []
+        for qv in queries:
+            scored = [(_ref_cos(qv, c), lid) for lid, c in cents]
+            scored.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+            want.append([lid for _, lid in scored[:n]])
+        assert got == want, n
+    assert want[0] == [1, 7, 9, 3, 2, 5]  # tie 1/7 by id, zero norm last
+    assert want[3] == want[4] == [1, 2, 3, 5, 7, 9]
+
+
+def test_full_probe_paths_match_bruteforce(spark, tmp_root):
+    """Probing every list (and re-ranking every candidate) must return
+    exactly the exact top-k: same ids, ranks and bit-identical cos, on a
+    corpus with a zero-norm row and duplicate vectors (exact ties)."""
+    from parquetranger_spark.operators.similarity import topk_cosine_ivf, topk_cosine_pq
+
+    rng = np.random.default_rng(11)
+    vecs = [list(map(float, r)) for r in rng.normal(size=(36, 8))]
+    vecs[5] = [0.0] * 8
+    vecs[20] = list(vecs[3])
+    vecs[21] = list(vecs[3])
+    vecs[30] = list(vecs[12])
+    corpus = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    ).cache()
+    q = corpus.where(F.col("vec_id").isin(3, 5, 12, 20, 27))
+    k, n_lists = 4, 4
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    want = rows(topk_cosine_bruteforce(q, corpus, k=k))
+    assert len(want) == 5 * k
+    assert [r[3] for r in want if r[0] == 5] == [None] * k
+    assert rows(topk_cosine_ivf(q, corpus, k=k, n_lists=n_lists, n_probe=n_lists)) == want
+    assert rows(topk_cosine_pq(q, corpus, k=k, m=4, n_codes=8, rerank=len(vecs))) == want
+    idx = AnnIndex(tmp_root + "/full", spark=spark)
+    idx.build(corpus, n_lists=n_lists, seed=1, pq_m=4, pq_codes=8)
+    assert rows(idx.query(q, k=k, n_probe=n_lists)) == want
+    assert rows(idx.query_pq(q, k=k, n_probe=n_lists, rerank=len(vecs))) == want
 
 
 def test_query_corpus_with_zero_norm_row(spark, idx):

@@ -215,7 +215,9 @@ def test_bruteforce_matches_python_reference(spark, case, expected):
 
 def test_bruteforce_query_blocks_match_single_block(spark, monkeypatch):
     """A query matrix over the ship cap is scored block by block, one
-    corpus pass each, and the union ranks exactly like one block."""
+    corpus pass each, and the union ranks exactly like one block; a
+    batch over the kernel's matrix cap is scored chunk by chunk, with
+    the same result."""
     from parquetranger_spark.operators import similarity
 
     crows = [(i, [float(i % 5), 1.0, 0.25 * (i % 3)]) for i in range(20)]
@@ -232,6 +234,12 @@ def test_bruteforce_query_blocks_match_single_block(spark, monkeypatch):
     )
     assert _run_topk(spark, qrows, crows, 4, "long", "multi") == single
     assert len(cut[-1]) >= 3
+
+    # the kernel's matrix cap at two query rows × two corpus rows: the
+    # one-partition corpus (one 24-row batch) is scored in 12 chunks
+    monkeypatch.setattr(similarity, "_KERNEL_MATRIX_BYTES", 2 * 2 * 8)
+    for k in (1, 4):
+        assert _run_topk(spark, qrows, crows, k, "long", "single") == _ref_topk(qrows, crows, k)
 
 
 def test_text_functions_shapes(spark, docs):

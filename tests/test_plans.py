@@ -455,31 +455,24 @@ def test_dv_read_broadcasts_tombstones(spark, tmp_path):
 def test_knn_density_ivf_no_cartesian(spark, sf_dir):
     """The outlier-density scale path must never be all-pairs: the IVF
     estimate stage is pure equi-join (no cartesian, no nested-loop), and
-    the full operator's only nested-loop join is the BOUNDED exact
-    rescan (broadcast side = a limit(rerank) id list + vectors)."""
+    the full operator's bounded exact rescan is the streamed top-k
+    kernel, not a join."""
     from parquetranger_spark.operators.similarity import knn_density_ivf
 
     vecs = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # estimate-only plan: candidate generation is a list_id equi-join;
-    # the only nested-loop joins are the n_lists-row (16) centroid
-    # probe-assignment broadcasts — constant-bounded, never corpus-sized
+    # list assignment (nearest_centroid_col) and probe ranking
+    # (_probe_order) are Arrow pandas_udfs over the shipped centroid
+    # table — no join of any kind against the centroids
     p_est = plan(knn_density_ivf(vecs, k=5, rerank=None))
     assert "CartesianProduct" not in p_est
-    # the only nested-loop join left is the n_lists-row centroid probe
-    # broadcast (list-assignment is nearest_centroid_col — an Arrow
-    # pandas_udf, no join at all); the estimate subtree appears twice
-    # (the starved-vector anti-join unions against it), 2 copies × 2
-    # prints = 4 (measured; round-10 briefly widened this to 8 — the
-    # real count never exceeded 4, so the tight bound is restored)
-    assert p_est.count("BroadcastNestedLoopJoin") <= 4
-    # full operator: the estimate is checkpointed (one IVF subtree per
-    # plan), so the only remaining nested-loop join is the bounded exact
-    # rescan (broadcast side = limit(rerank) candidates); cartesian never
+    assert p_est.count("BroadcastNestedLoopJoin") == 0
+    # full operator: the estimate is checkpointed and the exact rescan
+    # of the limit(rerank) candidates streams the corpus through the
+    # mapInPandas top-k kernel — no nested-loop join, cartesian never
     p_full = plan(knn_density_ivf(vecs, k=5, rerank=50))
     assert "CartesianProduct" not in p_full
-    # the bounded rescan's broadcast-NL join (formatted mode may print
-    # it once per adaptive subtree) — never a corpus×corpus pair source
-    assert p_full.count("BroadcastNestedLoopJoin") <= 2
+    assert p_full.count("BroadcastNestedLoopJoin") == 0
     # and the bounded side is visibly bounded: a limit feeds it
     assert "GlobalLimit" in p_full or "TakeOrderedAndProject" in p_full
 

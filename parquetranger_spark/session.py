@@ -9,9 +9,31 @@ an existing 1000-executor deployment unchanged.
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
 from pyspark.sql import SparkSession
+
+_WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
+
+
+def _driver_memory(meminfo: str) -> str:
+    """Default ``spark.driver.memory`` for a host whose ``/proc/meminfo``
+    reads ``meminfo``: half of ``MemTotal`` in whole GiB (at least 1),
+    capped at 16g; 16g when ``MemTotal`` is missing."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            kib = int(line.split()[1])
+            return f"{max(1, min(16, kib // (2 * 1024 * 1024)))}g"
+    return "16g"
+
+
+def _host_meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return ""
 
 
 def get_spark(app_name: str = "parquetranger-spark") -> SparkSession:
@@ -23,7 +45,24 @@ def get_spark(app_name: str = "parquetranger-spark") -> SparkSession:
     - Arrow on: vectorized pandas interchange for applyInPandas/pandas_udf.
     - UTC session timezone: keeps timestamp semantics aligned with the
       DuckDB oracle (naive-UTC) and makes epoch math engine-independent.
+    - Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` if set, else half the host's
+      ``MemTotal`` in whole GiB, capped at 16g (16g when it can't be read).
+    - Python workers get ``_worker_site`` on their path. Its
+      ``sitecustomize`` stops CPython 3.10-3.12's zipimport from re-reading
+      ``pyspark.zip`` and py4j's zip on the ``importlib.invalidate_caches()``
+      that PySpark runs at the start of every task -- most of a small
+      task's worker CPU. An archive is still re-read once its mtime or
+      size changes. A no-op on other CPython versions, and where the
+      directory doesn't exist (a cluster executor without this checkout).
+      Not set when the driver's interpreter has a ``sitecustomize`` of its
+      own, so an environment's hook is never shadowed.
     """
+    return _builder(app_name).getOrCreate()
+
+
+def _builder(app_name: str) -> SparkSession.Builder:
+    """The configured builder behind :func:`get_spark`; tools that need a
+    variant add their ``.config`` lines before ``getOrCreate()``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Gateway-mode note (round-9 soak forensics): Spark's default
     # pinned-thread py4j mode binds each Python thread to ONE socket; a
@@ -41,7 +80,7 @@ def get_spark(app_name: str = "parquetranger-spark") -> SparkSession:
     # PROCESSES), so the session keeps Spark's default and the soak
     # contains the flake with an idempotent-op stall watchdog
     # (tests/test_concurrency_soak.py).
-    return (
+    builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
@@ -74,10 +113,16 @@ def get_spark(app_name: str = "parquetranger-spark") -> SparkSession:
             "spark.python.sql.dataFrameDebugging.enabled",
             os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(_host_meminfo()),
+        )
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    if importlib.util.find_spec("sitecustomize") is None:
+        # Spark appends executorEnv's PYTHONPATH after pyspark.zip and py4j
+        builder = builder.config("spark.executorEnv.PYTHONPATH", _WORKER_SITE)
+    return builder
 
 
 def active_spark(df=None) -> SparkSession:

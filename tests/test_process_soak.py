@@ -48,10 +48,23 @@ def test_sixteen_process_writer_mixed_soak(spark, tmp_path_factory):
     summary.extend(_df(spark, [("seed", "S", 0.0)]))
 
     # the suite's session JVM keeps the heap earlier tests grew (GBs under
-    # the default 16g cap); a full GC hands the free part back to the OS
+    # the default heap cap); a full GC hands the free part back to the OS
     # before sixteen more JVMs start, or the kernel's OOM killer takes the
-    # session JVM on a 15 GB host and every later test loses py4j
-    spark.sparkContext._jvm.System.gc()
+    # session JVM on a 15 GB host and every later test loses py4j. After a
+    # full GC, G1 keeps up to MaxHeapFreeRatio (70%) of its heap free, so
+    # the GC alone left ~2 GB committed; with the ratios lowered for this
+    # one GC (both are manageable flags) it shrinks to ~1.4x the live heap
+    jvm = spark.sparkContext._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    ratios = {n: hotspot.getVMOption(n).getValue()
+              for n in ("MinHeapFreeRatio", "MaxHeapFreeRatio")}
+    hotspot.setVMOption("MinHeapFreeRatio", "10")
+    hotspot.setVMOption("MaxHeapFreeRatio", "30")
+    jvm.System.gc()
+    hotspot.setVMOption("MaxHeapFreeRatio", ratios["MaxHeapFreeRatio"])
+    hotspot.setVMOption("MinHeapFreeRatio", ratios["MinHeapFreeRatio"])
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)

@@ -16,37 +16,9 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquetranger_spark.queries import QUERIES, load_all  # noqa: E402
+from parquetranger_spark.session import _builder  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _spark_with_ui():
-    """get_spark() clone with the UI enabled (the REST API lives there)."""
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.mergeSchema", "false")
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "512"),
-        )
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
 
 
 def api(spark, path: str):
@@ -59,7 +31,8 @@ def api(spark, path: str):
 def main() -> None:
     load_all()
     names = sys.argv[1:]
-    spark = _spark_with_ui()
+    # the UI hosts the REST API this tool reads
+    spark = _builder("profile").config("spark.ui.enabled", "true").getOrCreate()
     # warm like bench.py does
     spark.sql("select count(*) c from range(100000)").collect()
     for name in names:

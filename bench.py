@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from parquetranger_spark.queries import QUERIES, load_all  # noqa: E402
-from parquetranger_spark.session import get_spark  # noqa: E402
+from parquetranger_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -246,6 +246,7 @@ def _fan_out(names: list[str], repeat: int) -> None:
     merged: dict[str, float] = {}
     approx: dict[str, float] = {}
     spread: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     bests: dict[str, float] = {}
     builds: dict[str, float] = {}
     serves: dict[str, float] = {}
@@ -255,6 +256,7 @@ def _fan_out(names: list[str], repeat: int) -> None:
         merged.update(part["queries"])
         approx.update(part.get("ann_approx_only") or {})
         spread.update(part.get("query_spread") or {})
+        compiles.update(part.get("codegen_compiles") or {})
         bests.update(part.get("queries_best") or {})
         builds.update(part.get("ann_build_s") or {})
         serves.update(part.get("ann_serve_s") or {})
@@ -265,6 +267,7 @@ def _fan_out(names: list[str], repeat: int) -> None:
         extra["r3_method_total"] = round(sum(part["queries"].values()), 3)
         extra["r3_method_ann_approx_only"] = part.get("ann_approx_only") or {}
     extra["query_spread"] = spread
+    extra["codegen_compiles"] = compiles
     extra["queries_best"] = bests
     extra["ann_build_s"] = builds
     extra["ann_serve_s"] = serves
@@ -345,6 +348,7 @@ def main() -> None:
     approx_only: dict[str, float] = {}
 
     sigmas: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     bests: dict[str, float] = {}
     builds: dict[str, float] = {}
     from parquetranger_spark.queries import common as _qcommon
@@ -353,7 +357,10 @@ def main() -> None:
         samples = []
         for _ in range(repeat):
             pre = set(_glob.glob(scratch_glob))
+            c0 = codegen_compiles(spark)
             dt = run_one(spark, name)
+            # classes compiled from generated code; the last repeat's is kept
+            compiles[name] = codegen_compiles(spark) - c0
             # index-building queries self-report their build seconds
             # (queries/common.py record_build): keep the build sample
             # PAIRED with its run so the chosen timing and its build
@@ -381,7 +388,8 @@ def main() -> None:
 
     for name in names:
         timings[name] = timed(name)
-        print(f"# {name}: {timings[name]}s (spread {sigmas[name]}s)", file=sys.stderr)
+        print(f"# {name}: {timings[name]}s (spread {sigmas[name]}s, "
+              f"{compiles[name]} compiles)", file=sys.stderr)
         if name in ANN_SPLIT:
             # verified-exact family: re-time ADJACENT to the full run
             # (same session age) with the exact twin + recall assert
@@ -389,13 +397,13 @@ def main() -> None:
             # path vs the deliberately-added verify surface. Gate
             # semantics are unchanged — the flag lives only here.
             os.environ["PQRS_BENCH_APPROX_ONLY"] = "1"
-            full_sigma, full_best = sigmas[name], bests[name]
+            full = sigmas[name], bests[name], compiles[name]
             try:
                 approx_only[name] = timed(name)
             finally:
                 os.environ.pop("PQRS_BENCH_APPROX_ONLY", None)
-                # spread/best reported for the FULL run
-                sigmas[name], bests[name] = full_sigma, full_best
+                # spread/best/compiles reported for the FULL run
+                sigmas[name], bests[name], compiles[name] = full
             print(f"# {name} (approx only): {approx_only[name]}s", file=sys.stderr)
 
     serve = {
@@ -406,6 +414,7 @@ def main() -> None:
         approx_only,
         {
             "query_spread": sigmas,
+            "codegen_compiles": compiles,
             "queries_best": bests,
             # one-off index construction vs the serve path (verdict r7
             # #6): serve_s = full timing minus the in-body build, the

@@ -56,6 +56,17 @@ def get_spark(app_name: str = "parquetranger-spark") -> SparkSession:
       directory doesn't exist (a cluster executor without this checkout).
       Not set when the driver's interpreter has a ``sitecustomize`` of its
       own, so an environment's hook is never shadowed.
+    - Codegen cache: ``spark.sql.codegen.cache.maxEntries`` = 1000 (Spark's
+      default is 100). One ``near_dedup_minhash`` + ``connected_components``
+      op compiles 110-118 distinct classes, so at 100 every dedup op evicts
+      its own classes and the top-k ones and recompiles them (~10-20 ms each,
+      1-2 CPU s a dedup op). The larger cache cost ~6 MB of metaspace over
+      the test suite's first 275 tests.
+    - ``spark.sql.ui.retainedExecutions`` = 100 (default 1000): the status
+      store keeps every retained SQL execution's plan metrics on the heap,
+      and nothing here reads them (job groups come from ``statusTracker``).
+    Both are static confs: the first session in a JVM fixes them, so a
+    session this function reuses keeps its own values.
     """
     return _builder(app_name).getOrCreate()
 
@@ -118,11 +129,21 @@ def _builder(app_name: str) -> SparkSession.Builder:
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory(_host_meminfo()),
         )
         .config("spark.ui.enabled", "false")
+        # static confs, sized in get_spark's docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.ui.retainedExecutions", "100")
     )
     if importlib.util.find_spec("sitecustomize") is None:
         # Spark appends executorEnv's PYTHONPATH after pyspark.zip and py4j
         builder = builder.config("spark.executorEnv.PYTHONPATH", _WORKER_SITE)
     return builder
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the session's JVM has compiled from generated code so far
+    (codegen cache misses); one py4j read, no Spark job."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def active_spark(df=None) -> SparkSession:

@@ -1,8 +1,10 @@
 """Session factory: the worker start-up hook that keeps zipimport from
-re-reading unchanged archives, and the host-sized driver heap."""
+re-reading unchanged archives, the host-sized driver heap, and a codegen
+cache that holds a dedup op's and a top-k request's classes together."""
 
 import importlib.util
 import os
+import random
 import subprocess
 import sys
 import textwrap
@@ -10,7 +12,8 @@ import zipfile
 
 import pytest
 
-from parquetranger_spark.session import _WORKER_SITE, _driver_memory
+from parquetranger_spark.operators import dedup, similarity
+from parquetranger_spark.session import _WORKER_SITE, _driver_memory, codegen_compiles
 
 EAGER_ZIP_REREAD = (3, 10) <= sys.version_info[:2] <= (3, 12)
 
@@ -87,3 +90,33 @@ def test_python_workers_skip_archive_rereads(spark):
 ])
 def test_driver_memory_is_half_the_host_capped_at_16g(meminfo, heap):
     assert _driver_memory(meminfo) == heap
+
+
+def test_repeated_dedup_and_topk_reuse_compiled_classes(spark):
+    # a dedup op compiles more classes than Spark's default cache of 100
+    # holds, so at that size the second pass recompiles ~118 of them
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(300)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(rng.randint(12, 30)))
+             for _ in range(120)]
+    texts += [t + " tail" for t in texts[::10]] + texts[:3]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    vecs = spark.createDataFrame(
+        [(i, [rng.gauss(0.0, 1.0) for _ in range(16)]) for i in range(200)],
+        "vec_id long, embedding array<float>")
+    queries = vecs.where(vecs.vec_id < 5)
+
+    def dedup_then_topk():
+        pairs = dedup.near_dedup_minhash(docs, threshold=0.6)
+        comps = dedup.connected_components(pairs).collect()
+        top = similarity.topk_cosine_bruteforce(queries, vecs, k=5).collect()
+        return len(comps), len(top)
+
+    first = dedup_then_topk()
+    before = codegen_compiles(spark)
+    assert dedup_then_topk() == first
+    # usually 0, but a warm repeat can recompile a few (2 seen in 1 of 14
+    # repeats); likely AQE numbering codegen stages, whose number names
+    # the class, in the order concurrent stages finish
+    assert codegen_compiles(spark) - before < 10

@@ -2,22 +2,25 @@
 
 Floats are widened to double *before* any arithmetic (float×float is
 exactly representable in double, so the only rounding is in the
-summation), and dot products are sequential left folds — the exact shape
+summation), and every exact cosine is one fold, :func:`_fold_dot`: per
+row, float64 products added in ascending dimension order — the shape
 the DuckDB oracle mirrors, making similarity values bit-identical across
-engines.
+engines. numpy vectorizes the fold ACROSS ROWS while each row's
+reduction stays SEQUENTIAL ACROSS DIMENSIONS, and IEEE-754 ops are
+deterministic given order.
 
-The per-pair scoring entry points (:func:`dot`, :func:`cosine_prenormed`)
-evaluate as Arrow-batched pandas UDFs: Catalyst higher-order functions
-(``zip_with``/``aggregate``) have no codegen and run INTERPRETED — each
-candidate pair in a top-k join pays ~3·dim interpreted expression nodes
-(guide §4.2: hand whole batches to vectorized native code instead).
-The numpy kernels vectorize ACROSS ROWS while keeping every reduction
-SEQUENTIAL ACROSS DIMENSIONS — each float64 multiply/add happens in the
-exact order the Catalyst fold defines, and IEEE-754 ops are
-deterministic given order, so the scores are BIT-IDENTICAL to the
-interpreted folds (and to the DuckDB oracle). The ``*_expr`` twins keep
-the pure Column forms for callers that must stay JVM-only
-(constant-folded plane literals, codegen-only surfaces).
+Two entry points share that fold:
+
+* :func:`cosine` scores pairs — one Arrow-batched pandas UDF computing
+  the dot and both norms of each (a, b) row (the filter-then-refine
+  verify step of every ANN, LSH, PQ and embedding-dedup path);
+* :func:`_fold_cos` scores a query matrix against a candidate matrix —
+  the streamed top-k kernel and the probe ranking (:func:`_probe_order`).
+
+Both return an undefined cosine (null vector, length mismatch, NaN or
+null element, zero norm) as NaN, which reaches Spark as NULL.
+:func:`dot_expr` keeps the pure Column fold only for the constant-folded
+hyperplane literal of :func:`hyperplane_bits`.
 """
 
 from __future__ import annotations
@@ -44,36 +47,17 @@ def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 # --- Arrow-batched exact kernels ----------------------------------------
 #
-# Semantics replicated from the Column folds, per row:
-#   dot:  ((0.0 + a0·b0) + a1·b1) + …    (zip_with pads length mismatch
-#         with NULL and any NULL element nullifies the fold → None)
-#   norm: sqrt(((0.0 + a0²) + a1²) + …)
-# numpy evaluates the same IEEE ops column-by-column across the batch —
-# identical order per row, identical bits. NaN propagates identically.
-
-
-def _mat(vals):
-    """rows → (n × dim) float64 matrix; None when the rows are ragged or
-    hold a null vector — the caller then scores row by row with
-    :func:`_row_dot`."""
-    import numpy as np
-
-    try:
-        return np.stack([np.asarray(v, dtype=np.float64) for v in vals])
-    except (ValueError, TypeError):
-        return None
+# Per row: dot = ((0.0 + a0·b0) + a1·b1) + …, norm = √dot(a, a) and
+# cosine = dot(a, b) / (norm(a)·norm(b)). numpy evaluates these IEEE ops
+# column by column across the rows — the same order per row, the same
+# bits; a NaN element propagates to a NaN cosine.
 
 
 def _fold_dot(A, B):
     """Batched sequential-fold dot: per row, float64 adds in ascending
-    dimension order — the Catalyst ``aggregate`` fold, vectorized across
-    rows only."""
+    dimension order, vectorized across rows only."""
     import numpy as np
 
     acc = np.zeros(A.shape[0], dtype=np.float64)
@@ -87,8 +71,7 @@ def _fold_dot(A, B):
 def _rows_mat(vals, dim: int):
     """rows → (n × ``dim``) float64 matrix in which a null row, or one
     whose length is not ``dim``, is a row of NaN: every cosine against
-    it comes out undefined (NaN), as the Column fold's NULL does. Null
-    elements become NaN too."""
+    it comes out undefined (NaN). Null elements become NaN too."""
     import numpy as np
 
     M = np.full((len(vals), dim), np.nan)
@@ -101,9 +84,9 @@ def _rows_mat(vals, dim: int):
 def _fold_cos(Q, C):
     """(nq × dim), (m × dim) → (nq × m) cosine matrix. Each cell's dot
     accumulates float64 products in ascending dimension order and
-    divides by the same ``qn·cn`` product as :func:`_row_dot` and the
-    Catalyst fold — bit-identical per cell, vectorized across cells. A
-    NaN row (see :func:`_rows_mat`) or a zero norm gives NaN cells."""
+    divides by the same ``qn·cn`` product as :func:`cosine` —
+    bit-identical per cell, vectorized across cells. A NaN row (see
+    :func:`_rows_mat`) or a zero norm gives NaN cells."""
     import numpy as np
 
     acc = np.zeros((Q.shape[0], C.shape[0]), dtype=np.float64)
@@ -134,75 +117,41 @@ def _probe_order(Q, C, lids, n: int):
     return lids[order[:, :n]]
 
 
-def _row_dot(a, b):
-    """Exact scalar fallback (ragged/null rows) — mirrors zip_with +
-    aggregate: length mismatch or a null element → None."""
-    if a is None or b is None or len(a) != len(b):
-        return None
-    acc = 0.0
-    for x, y in zip(a, b):
-        if x is None or y is None:
-            return None
-        acc = acc + float(x) * float(y)
-    return acc
-
-
-def _series_dot(a, b):
+def _series_cos(a, b):
+    """The :func:`cosine` kernel: rows are grouped by vector length and
+    each group of equal-length pairs is scored with :func:`_fold_dot` —
+    the dot and both norms, as :func:`_fold_cos` computes them. A row
+    with a null vector or two lengths stays NaN."""
     import numpy as np
     import pandas as pd
 
     av, bv = a.to_numpy(), b.to_numpy()
-    if not len(av):
-        return pd.Series([], dtype="float64")
-    na_mask = a.isna().to_numpy() | b.isna().to_numpy()
-    if not na_mask.any():
-        A, B = _mat(av), _mat(bv)
-        if A is not None and B is not None and A.shape == B.shape:
-            return pd.Series(_fold_dot(A, B))
-    # ragged or null-bearing batch: exact row-wise fold
-    return pd.Series(
-        [_row_dot(x, y) for x, y in zip(av, bv)], dtype="object"
-    ).astype("float64")
+    la = np.array([-1 if v is None else len(v) for v in av], dtype=np.int64)
+    lb = np.array([-1 if v is None else len(v) for v in bv], dtype=np.int64)
+    ok = (la == lb) & (la >= 0)
+    out = np.full(len(av), np.nan)
+    for dim in np.unique(la[ok]):
+        rows = np.flatnonzero(ok & (la == dim))
+        A, B = _rows_mat(av[rows], dim), _rows_mat(bv[rows], dim)
+        den = np.sqrt(_fold_dot(A, A)) * np.sqrt(_fold_dot(B, B))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out[rows] = _fold_dot(A, B) / den
+    return pd.Series(out)
 
 
-_DOT_UDF = None
+_COS_UDF = None
 
 
-def _dot_udf():
-    # singleton: one UDF object (one cloudpickle registration) per
-    # process instead of one per call site per query construction
-    global _DOT_UDF
-    if _DOT_UDF is None:
-        _DOT_UDF = F.pandas_udf(_series_dot, "double")
-    return _DOT_UDF
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product, Arrow-batched (bit-identical to
-    :func:`dot_expr` — see module doc)."""
-    return _dot_udf()(a, b)
-
-
-def norm(a: Column) -> Column:
-    """√(Σ x²), sequential fold. Deliberately the INTERPRETED expression
-    form: norm is a per-ROW projection (O(n·dim), not O(pairs·dim)) that
-    rides inside every lifecycle commit's write job — an Arrow version
-    adds a Python stage to each tiny write for work the interpreter does
-    in ms at any batch size, and measured +1-2 s on the add()-per-batch
-    ANN ingest lifecycle. The per-PAIR fold (:func:`dot`) is the one that
-    scales with candidate volume and goes through Arrow."""
-    return norm_expr(a)
-
-
-def cosine_prenormed(a_d: Column, b_d: Column, na: Column, nb: Column) -> Column:
-    """Cosine with the per-ROW work hoisted: callers project the double
-    cast and the norm once per input row BEFORE a join, so each candidate
-    pair pays one dot fold instead of two casts + two norm folds.
-    ``dot/(na*nb)`` performs the same double ops in the same order as
-    :func:`_fold_cos`, so results are bit-identical; the division runs in
-    the JVM (one codegen'd double op). A zero norm scores NULL
-    (``try_divide``) instead of raising ``DIVIDE_BY_ZERO`` under ANSI."""
-    return F.try_divide(dot(a_d, b_d), na * nb)
+def cosine(a: Column, b: Column) -> Column:
+    """Exact cosine of two ``array<double>`` columns, row by row, in one
+    Arrow-batched pandas UDF (see module doc). An undefined cosine — a
+    null vector, two lengths, a NaN or null element, a zero norm — is
+    NaN in the kernel and NULL in Spark."""
+    global _COS_UDF
+    if _COS_UDF is None:
+        # one UDF object (one cloudpickle registration) per process
+        _COS_UDF = F.pandas_udf(_series_cos, "double")
+    return _COS_UDF(a, b)
 
 
 def hyperplane_bits(arr: Column, planes: list[list[float]]) -> Column:

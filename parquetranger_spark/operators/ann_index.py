@@ -18,10 +18,11 @@ vector surface at all):
 - **build** — a seeded driver-side k-means fit on a bounded training
   sample (:func:`.similarity.fit_coarse_centroids`, the same device as
   :func:`.similarity.topk_cosine_ivf`) gives the centroids, and a
-  broadcast argmin assigns every vector a list; vectors land
-  pre-normalized (norm stored alongside) so query time never recomputes
-  corpus norms. ``n_lists`` defaults to ≈√n, the IVF balance that
-  keeps probe cost sub-quadratic as the corpus grows.
+  broadcast argmin assigns every vector a list; vectors land as
+  ``array<double>`` (``cv``), scored at query time by the one exact pair
+  scorer, :func:`..functions.vectors.cosine`. ``n_lists`` defaults to
+  ≈√n, the IVF balance that keeps probe cost sub-quadratic as the
+  corpus grows.
 - **add** — new vectors route to their nearest EXISTING centroid
   (broadcast argmin — one narrow pass, no re-train, no shuffle of old
   data) and append through the normal commit path: an index refresh is
@@ -32,7 +33,9 @@ vector surface at all):
   collected query batch (:func:`..functions.vectors._probe_order`),
   probe the top ``n_probe`` lists, equi-join ONLY those partitions,
   exact cosine + per-query top-k via :func:`.similarity._rank_topk`
-  (a rank window, WindowGroupLimit — no global sort).
+  (a rank window, WindowGroupLimit — no global sort). A query batch is
+  served in blocks of at most ``similarity._QUERY_BLOCK_BYTES`` of
+  query vectors (:func:`_serve_blocks`), one probe frame each.
 
 Periodic ``maintain()`` on the postings repo compacts lists fragmented
 by many small adds — the same maintenance story as any table here.
@@ -45,7 +48,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_prenormed, norm, to_double
+from ..functions.vectors import cosine, to_double
 from ..sources.table_repo import TableRepo
 from .similarity import _rank_topk
 
@@ -69,6 +72,24 @@ def _local_df(spark, rows, schema) -> DataFrame:
     runner (measured 6.5 s for a one-row books frame vs 0.6 s here).
     A single slice = one Python eval, one part file."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def _serve_blocks(rows: list, row_bytes) -> list:
+    """Consecutive blocks of collected query rows, each holding at most
+    ``similarity._QUERY_BLOCK_BYTES`` of ``row_bytes(row)`` (and at least
+    one row): the bound on a serve round's one-slice query frame. No
+    rows → one empty block, so the plan keeps its shape."""
+    from .similarity import _QUERY_BLOCK_BYTES as cap
+
+    blocks, cur, used = [], [], 0
+    for row in rows:
+        nbytes = row_bytes(row)
+        if cur and used + nbytes > cap:
+            blocks.append(cur)
+            cur, used = [], 0
+        cur.append(row)
+        used += nbytes
+    return blocks + [cur]
 
 
 class AnnIndex:
@@ -158,7 +179,7 @@ class AnnIndex:
             F.col(self.id_col),
             to_double(F.col(self.vec_col)).alias("cv"),
             *self_attrs,
-        ).withColumn("cn", norm(F.col("cv")))
+        )
         # quantizer fit: ONE bounded-sample collect + seeded driver-side
         # Lloyd, then a shuffle-free broadcast-argmin assignment pass —
         # replaces pyspark.ml KMeans (~7 jobs fitting the same bounded
@@ -175,7 +196,7 @@ class AnnIndex:
             sample, k=n_lists, seed=seed, iters=max(max_iter, 15)
         )
         assigned = nearest_centroid_col(c, "cv", list(enumerate(centers))).select(
-            self.id_col, "cv", "cn", "list_id", *self_attrs
+            self.id_col, "cv", "list_id", *self_attrs
         )
         if pq_m:
             from .similarity import train_pq_codebooks
@@ -332,9 +353,9 @@ class AnnIndex:
         extra = [c for c in batch.columns if c not in (self.id_col, self.vec_col)]
         b = batch.select(
             F.col(self.id_col), to_double(F.col(self.vec_col)).alias("cv"), *extra
-        ).withColumn("cn", norm(F.col("cv")))
+        )
         assigned = nearest_centroid_col(b, "cv", cents).select(
-            self.id_col, "cv", "cn", "list_id", *extra
+            self.id_col, "cv", "list_id", *extra
         )
         pq = self._load_pq_meta()
         if pq is not None:
@@ -1102,117 +1123,114 @@ class AnnIndex:
             # ADC must score against those (round-9 advice; the next
             # maintain() repairs the table atomically)
             cur_epoch = min(metas)
-        # LUTs built DRIVER-SIDE from the collected query batch (bounded
-        # by the query batch, never the corpus — the same driver-side
-        # collect the probe-id pushdown already does) and shipped once
-        # via sc.broadcast. The old shape computed them in an executor
-        # pandas UDF, localCheckpointed the tiny frame (a job) and joined
-        # the m×n_codes LUT array onto EVERY candidate row, folding it
-        # with interpreted zip_with+aggregate per row (guide §4.2/§2.3).
-        # Mid-retrain (two codebook epochs live) the broadcast keys on
-        # (query_id, epoch) and candidates score against the books of
-        # their own stamped epoch — serving stays correct while re-encode
-        # batches land.
+        from functools import reduce
+
         from .similarity import _adc_udf, _lut_rows, _ship
 
-        q_rows = q.select("query_id", "qv").collect()
-        sc = self.postings._session().sparkContext
-        if multi_epoch:
-            luts = {
-                (r["query_id"], int(e)): _lut_rows(r["qv"], metas[e]["books"])
-                for r in q_rows
-                for e in metas
-            }
-        else:
-            luts = {
-                r["query_id"]: _lut_rows(r["qv"], metas[cur_epoch]["books"])
-                for r in q_rows
-            }
-        lut_bc = _ship(sc, luts, sum(v.nbytes for v in luts.values()))
+        q_rows = [(r["query_id"], r["qv"]) for r in q.select("query_id", "qv").collect()]
+        spark_s = self.postings._session()
         # probe ranking + the query-side frame both come from the already-
         # collected batch (see _probe_rows): no probe crossJoin/window
         # jobs, no probed-id collect, and the final re-rank joins a local
         # query frame instead of re-scanning the query lineage
-        prows = self._probe_rows([(r["query_id"], r["qv"]) for r in q_rows], n_probe)
-        probed_ids = sorted({lid for _, _, _, lids in prows for lid in lids})
-        spark_s = self.postings._session()
-        probes = _local_df(
-            spark_s,
-            [(qid, lid) for qid, _, _, lids in prows for lid in lids],
-            f"query_id {qtype}, list_id int",
-        )
-        qloc = _local_df(
-            spark_s,
-            [(qid, qv, qn) for qid, qv, qn, _ in prows],
-            f"query_id {qtype}, qv array<double>, qn double",
-        )
-        # candidate scan: codes only — cv/cn are PRUNED from this read
-        code_cols = [F.col(self.id_col).alias("neighbor_id"), F.col("pq"), F.col("list_id")]
-        if multi_epoch:
-            # a NULL stamp under multi-epoch can only be a row written
-            # before the epoch machinery existed — its code came from
-            # the OLDEST epoch's books, so that is what ADC must score
-            # it against (defaulting to the NEWEST was the round-9
-            # advice's wrong-ranking hazard, in column-present form)
-            code_cols.append(
-                F.coalesce(F.col("pq_epoch"), F.lit(int(min(metas)))).alias("pq_epoch")
+        prows = self._probe_rows(q_rows, n_probe)
+
+        def _scored(blk):
+            # LUTs built DRIVER-SIDE from the collected query block
+            # (bounded by the query batch, never the corpus) and shipped
+            # once per block via sc.broadcast. The old shape computed them
+            # in an executor pandas UDF, localCheckpointed the tiny frame
+            # (a job) and joined the m×n_codes LUT array onto EVERY
+            # candidate row, folding it with interpreted zip_with+aggregate
+            # per row (guide §4.2/§2.3). Mid-retrain (two codebook epochs
+            # live) the broadcast keys on (query_id, epoch) and candidates
+            # score against the books of their own stamped epoch — serving
+            # stays correct while re-encode batches land.
+            if multi_epoch:
+                luts = {
+                    (qid, int(e)): _lut_rows(qv, metas[e]["books"])
+                    for qid, qv, _ in blk
+                    for e in metas
+                }
+            else:
+                luts = {qid: _lut_rows(qv, metas[cur_epoch]["books"]) for qid, qv, _ in blk}
+            lut_bc = _ship(spark_s.sparkContext, luts, sum(v.nbytes for v in luts.values()))
+            probed_ids = sorted({lid for _, _, lids in blk for lid in lids})
+            probes = _local_df(
+                spark_s,
+                [(qid, lid) for qid, _, lids in blk for lid in lids],
+                f"query_id {qtype}, list_id int",
             )
-        codes = post.where(F.col("list_id").isin(probed_ids)).select(*code_cols)
-        cand = probes.select("query_id", "list_id").join(codes, "list_id")
-        if exclude_self:
-            cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
-        # ADC: Σ_j lut[j][code_j] — the same sequential left fold the old
-        # zip_with+aggregate expression evaluated (bit-identical), as one
-        # Arrow batch + numpy gather per subspace (see similarity._adc_udf)
-        adc_cols = [F.col("query_id"), F.col("pq")]
-        if multi_epoch:
-            adc_cols.append(F.col("pq_epoch"))
-        adc = _adc_udf(lut_bc)(*adc_cols)
-        wa = Window.partitionBy("query_id").orderBy(
-            F.col("adc").desc(), F.col("neighbor_id")
-        )
-        short = (
-            cand.select("query_id", "neighbor_id", "list_id", adc.alias("adc"))
-            .withColumn("__r", F.row_number().over(wa))
-            .where(F.col("__r") <= rerank)
-            .select("query_id", "neighbor_id", "list_id")
-        )
-        # exact refine: raw vectors for the CANDIDATE ids alone. The
-        # shortlist is bounded by rerank×|queries| (driver-safe), and
-        # materializing the ids lets the isin() predicate PUSH INTO the
-        # parquet scan — without it the join keys never reach the scan
-        # and the probed partitions' cv/cn columns are read in full a
-        # second time. Deliberately NOT checkpointed: the collect pays
-        # one extra (narrow, codes-only) ADC pass, which is far cheaper
-        # than the wide cv scan the id pushdown eliminates — and the
-        # codes-only scan stays visible in the served plan (the column-
-        # pruning plan gate reads it there). The pushdown is CAPPED
-        # (round-8 advice): past ~16k ids the In-literal dominates plan
-        # size and task serialization; above the cap the inner join on
-        # neighbor_id below restricts candidates instead, trading one
-        # wider probed-partition read for a bounded plan.
-        vecs = self.postings.get_full_df().where(
-            F.col("list_id").isin(probed_ids)
-        )
-        if rerank * len(q_rows) <= 16384:
-            cand_ids = [
-                r["neighbor_id"]
-                for r in short.select("neighbor_id").distinct().collect()
-            ]
-            vecs = vecs.where(F.col(self.id_col).isin(cand_ids))
-        vecs = vecs.select(F.col(self.id_col).alias("neighbor_id"), "cv", "cn")
-        scored = (
-            short.join(vecs, "neighbor_id")
-            .join(qloc, "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine_prenormed(
-                    F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-                ).alias("cos"),
+            qloc = _local_df(
+                spark_s,
+                [(qid, qv) for qid, qv, _ in blk],
+                f"query_id {qtype}, qv array<double>",
             )
-        )
-        return _rank_topk(scored, k)
+            # candidate scan: codes only — cv is PRUNED from this read
+            code_cols = [F.col(self.id_col).alias("neighbor_id"), F.col("pq"), F.col("list_id")]
+            if multi_epoch:
+                # a NULL stamp under multi-epoch can only be a row written
+                # before the epoch machinery existed — its code came from
+                # the OLDEST epoch's books, so that is what ADC must score
+                # it against (defaulting to the NEWEST was the round-9
+                # advice's wrong-ranking hazard, in column-present form)
+                code_cols.append(
+                    F.coalesce(F.col("pq_epoch"), F.lit(int(min(metas)))).alias("pq_epoch")
+                )
+            codes = post.where(F.col("list_id").isin(probed_ids)).select(*code_cols)
+            cand = probes.select("query_id", "list_id").join(codes, "list_id")
+            if exclude_self:
+                cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
+            # ADC: Σ_j lut[j][code_j] — the same sequential left fold the old
+            # zip_with+aggregate expression evaluated (bit-identical), as one
+            # Arrow batch + numpy gather per subspace (see similarity._adc_udf)
+            adc_cols = [F.col("query_id"), F.col("pq")]
+            if multi_epoch:
+                adc_cols.append(F.col("pq_epoch"))
+            adc = _adc_udf(lut_bc)(*adc_cols)
+            wa = Window.partitionBy("query_id").orderBy(
+                F.col("adc").desc(), F.col("neighbor_id")
+            )
+            short = (
+                cand.select("query_id", "neighbor_id", "list_id", adc.alias("adc"))
+                .withColumn("__r", F.row_number().over(wa))
+                .where(F.col("__r") <= rerank)
+                .select("query_id", "neighbor_id", "list_id")
+            )
+            # exact refine: raw vectors for the CANDIDATE ids alone. The
+            # shortlist is bounded by rerank×|queries| (driver-safe), and
+            # materializing the ids lets the isin() predicate PUSH INTO the
+            # parquet scan — without it the join keys never reach the scan
+            # and the probed partitions' cv column is read in full a
+            # second time. Deliberately NOT checkpointed: the collect pays
+            # one extra (narrow, codes-only) ADC pass, which is far cheaper
+            # than the wide cv scan the id pushdown eliminates — and the
+            # codes-only scan stays visible in the served plan (the column-
+            # pruning plan gate reads it there). The pushdown is CAPPED
+            # (round-8 advice): past ~16k ids the In-literal dominates plan
+            # size and task serialization; above the cap the inner join on
+            # neighbor_id below restricts candidates instead, trading one
+            # wider probed-partition read for a bounded plan.
+            vecs = self.postings.get_full_df().where(
+                F.col("list_id").isin(probed_ids)
+            )
+            if rerank * len(blk) <= 16384:
+                cand_ids = [
+                    r["neighbor_id"]
+                    for r in short.select("neighbor_id").distinct().collect()
+                ]
+                vecs = vecs.where(F.col(self.id_col).isin(cand_ids))
+            vecs = vecs.select(F.col(self.id_col).alias("neighbor_id"), "cv")
+            return (
+                short.join(vecs, "neighbor_id")
+                .join(qloc, "query_id")
+                .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
+            )
+
+        # one serve round per query block (_serve_blocks): queries are
+        # disjoint across blocks, so the union ranks like one block
+        blocks = _serve_blocks(prows, lambda r: 8 * len(r[1] or ()))
+        return _rank_topk(reduce(DataFrame.unionAll, map(_scored, blocks)), k)
 
     def _probe_rows(self, q_rows: list, n_probe: int) -> list:
         """Driver-side probe ranking: for each collected (query_id, qv)
@@ -1227,28 +1245,20 @@ class AnnIndex:
         same kernel :func:`.similarity.topk_cosine_ivf` runs on the
         executors: centroid cosine descending, an undefined cosine
         (null or ragged query, NaN element, zero norm) after every real
-        one, ties by list_id. Returns [(query_id, qv, qn, [list_id,
-        ...])] with qn computed by the same fold as the ``norm`` column
-        it replaces (NaN for a null or ragged query, whose every cosine
-        is undefined)."""
+        one, ties by list_id. Returns [(query_id, qv, [list_id, ...])]."""
         import numpy as np
 
-        from ..functions.vectors import _fold_dot, _probe_order, _rows_mat
+        from ..functions.vectors import _probe_order, _rows_mat
 
         cents = self._centroid_pairs()
         dim = len(cents[0][1]) if cents else 0
-        Q = _rows_mat([qv for _, qv in q_rows], dim)
         order = _probe_order(
-            Q,
+            _rows_mat([qv for _, qv in q_rows], dim),
             _rows_mat([c for _, c in cents], dim),
             np.array([lid for lid, _ in cents], dtype=np.int64),
             n_probe,
         )
-        qn = np.sqrt(_fold_dot(Q, Q))
-        return [
-            (qid, qv, float(qn[i]), order[i].tolist())
-            for i, (qid, qv) in enumerate(q_rows)
-        ]
+        return [(qid, qv, order[i].tolist()) for i, (qid, qv) in enumerate(q_rows)]
 
     def _topk_once(
         self,
@@ -1259,33 +1269,38 @@ class AnnIndex:
         exclude_self: bool,
         where: str | None,
     ) -> DataFrame:
+        from functools import reduce
+
         spark = self.postings._session()
-        rows = self._probe_rows(q_rows, n_probe)
-        probed_ids = sorted({lid for _, _, _, lids in rows for lid in lids})
-        # the probe table is a ONE-slice local frame (n_queries × n_probe
-        # rows) — broadcast into the candidate join, no shuffle, no
-        # checkpoint job
-        probes = _local_df(
-            spark,
-            [(qid, qv, qn, lid) for qid, qv, qn, lids in rows for lid in lids],
-            f"query_id {qtype}, qv array<double>, qn double, list_id int",
+        post = self.postings.get_full_df()
+
+        def _scored(blk):
+            probed_ids = sorted({lid for _, _, lids in blk for lid in lids})
+            # the probe table is a ONE-slice local frame (n_queries ×
+            # n_probe rows) — broadcast into the candidate join, no
+            # shuffle, no checkpoint job
+            probes = _local_df(
+                spark,
+                [(qid, qv, lid) for qid, qv, lids in blk for lid in lids],
+                f"query_id {qtype}, qv array<double>, list_id int",
+            )
+            inv = post.where(F.col("list_id").isin(probed_ids))
+            if where is not None:
+                # attribute pre-filter INSIDE the probed partitions' scan —
+                # Catalyst pushes it to the parquet reader
+                inv = inv.where(F.expr(where))
+            inv = inv.select(F.col(self.id_col).alias("neighbor_id"), "cv", "list_id")
+            cand = probes.join(inv, "list_id")
+            if exclude_self:
+                cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
+            return cand.select(
+                "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos")
+            )
+
+        # one probe frame per query block (_serve_blocks): a query's
+        # vector rides once per probed list; queries are disjoint across
+        # blocks, so the union ranks like one block
+        blocks = _serve_blocks(
+            self._probe_rows(q_rows, n_probe), lambda r: 8 * len(r[1] or ()) * len(r[2])
         )
-        inv = self.postings.get_full_df().where(F.col("list_id").isin(probed_ids))
-        if where is not None:
-            # attribute pre-filter INSIDE the probed partitions' scan —
-            # Catalyst pushes it to the parquet reader
-            inv = inv.where(F.expr(where))
-        inv = inv.select(F.col(self.id_col).alias("neighbor_id"), "cv", "cn", "list_id")
-        cand = probes.join(inv, "list_id")
-        if exclude_self:
-            cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
-        return _rank_topk(
-            cand.select(
-                "query_id",
-                "neighbor_id",
-                cosine_prenormed(
-                    F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-                ).alias("cos"),
-            ),
-            k,
-        )
+        return _rank_topk(reduce(DataFrame.unionAll, map(_scored, blocks)), k)

@@ -681,7 +681,7 @@ def near_dedup_embedding(
     the same bucket with overwhelming probability); verify with exact
     double cosine. ``bucket_cap`` salts oversized hyperplane buckets (see
     :func:`_salt_oversized`)."""
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    from ..functions.vectors import cosine, to_double
     from .similarity import default_planes
 
     # dim= lets callers skip the tiny-but-real select(size).first() probe
@@ -690,8 +690,7 @@ def near_dedup_embedding(
     # the bucket self-join and pair dedup carry ONLY ids (shuffling
     # vectors through candidate generation multiplies exchange bytes by
     # the embedding dim); vectors attach once per candidate pair via two
-    # hash joins on pre-normed projections — one dot fold per pair,
-    # bit-identical scores
+    # hash joins and vectors.cosine scores the pair
     with_b = df.select(
         F.col(id_col), hyperplane_bits(F.col(vec_col), planes).alias("bucket")
     )
@@ -704,19 +703,13 @@ def near_dedup_embedding(
         .select("id_a", "id_b")
         .distinct()
     )
-    vec = df.select(
-        F.col(id_col), to_double(F.col(vec_col)).alias("__vd")
-    ).withColumn("__vn", norm(F.col("__vd")))
-    va = vec.select(F.col(id_col).alias("id_a"), F.col("__vd").alias("va"), F.col("__vn").alias("na"))
-    vb = vec.select(F.col(id_col).alias("id_b"), F.col("__vd").alias("vb"), F.col("__vn").alias("nb"))
+    vec = df.select(F.col(id_col), to_double(F.col(vec_col)).alias("__vd"))
+    va = vec.select(F.col(id_col).alias("id_a"), F.col("__vd").alias("va"))
+    vb = vec.select(F.col(id_col).alias("id_b"), F.col("__vd").alias("vb"))
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            cosine_prenormed(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")).alias("cos"),
-        )
+        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos"))
         .where(F.col("cos") >= threshold)
     )
 
@@ -877,19 +870,17 @@ def semantic_dedup(
     duplicate blobs) exactly like the LSH buckets. Vectors are normalized
     BEFORE clustering so scaled copies of one direction always co-cluster
     (assignment is a deterministic argmin over broadcast centroids);
-    candidate generation shuffles ids only; each surviving pair pays one
-    pre-normed dot fold.
+    candidate generation shuffles ids only; each surviving pair is scored
+    by :func:`~..functions.vectors.cosine`.
 
     The prune rule — drop x iff some y < x has cos(x, y) ≥ τ — is a pure
     pairwise predicate (no cluster-representative election), so when
     candidate recall is total the result is engine-exact and a SQL oracle
     can brute-force it."""
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    from ..functions.vectors import cosine, to_double
     from .similarity import _train_cap, fit_coarse_centroids, nearest_centroid_col
 
-    vec = df.select(F.col(id_col), to_double(F.col(vec_col)).alias("__vd")).withColumn(
-        "__vn", norm(F.col("__vd"))
-    )
+    vec = df.select(F.col(id_col), to_double(F.col(vec_col)).alias("__vd"))
     # cluster fit: ONE bounded-sample collect + seeded driver-side Lloyd
     # on L2-normalized vectors, then a shuffle-free broadcast-argmin
     # assignment — replaces pyspark.ml KMeans (~7 distributed jobs +
@@ -914,7 +905,7 @@ def semantic_dedup(
     )
     assigned = nearest_centroid_col(
         vec, "__vd", list(enumerate(centers)), out_col="__cluster", unit=True
-    ).select(id_col, "__vd", "__vn", "__cluster")
+    ).select(id_col, "__vd", "__cluster")
     ids = assigned.select(F.col(id_col), "__cluster")
     ids, keys = _salt_oversized(ids, ["__cluster"], id_col, bucket_cap)
     a = ids.select(F.col(id_col).alias("id_a"), *keys)
@@ -925,19 +916,12 @@ def semantic_dedup(
         .select("id_a", "id_b")
         .distinct()
     )
-    va = assigned.select(
-        F.col(id_col).alias("id_a"), F.col("__vd").alias("va"), F.col("__vn").alias("na")
-    )
-    vb = assigned.select(
-        F.col(id_col).alias("id_b"), F.col("__vd").alias("vb"), F.col("__vn").alias("nb")
-    )
+    va = assigned.select(F.col(id_col).alias("id_a"), F.col("__vd").alias("va"))
+    vb = assigned.select(F.col(id_col).alias("id_b"), F.col("__vd").alias("vb"))
     pruned = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .where(
-            cosine_prenormed(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
-            >= threshold
-        )
+        .where(cosine(F.col("va"), F.col("vb")) >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

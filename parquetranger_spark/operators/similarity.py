@@ -72,9 +72,10 @@ def topk_cosine_bruteforce(
     ``_KERNEL_MATRIX_BYTES`` (64 MB); a group too wide for that scores
     one corpus row at a time.
 
-    Scores are BIT-IDENTICAL to the Catalyst fold: float64 products
-    accumulate in ascending dimension order and divide by the same
-    (qn·cn) product (:func:`~..functions.vectors._fold_cos`).
+    Scores are BIT-IDENTICAL to the pair scorer
+    :func:`~..functions.vectors.cosine`: float64 products accumulate in
+    ascending dimension order and divide by the same (qn·cn) product
+    (:func:`~..functions.vectors._fold_cos`).
 
     Edge-input policy, the same for any id type and any input:
 
@@ -211,7 +212,7 @@ def topk_cosine_lsh(
     candidate dedup carry ONLY ids — at real embedding dims, shuffling
     the vectors through candidate generation multiplies exchange bytes by
     ~dim×tables; vectors attach once per surviving pair via two hash
-    joins on pre-normed projections, and each pair pays one dot fold.
+    joins and each pair is scored by :func:`~..functions.vectors.cosine`.
 
     ``bucket_cap`` bounds the corpus side of each (table, bucket): a
     pathological bucket holding millions of near-identical vectors would
@@ -222,7 +223,7 @@ def topk_cosine_lsh(
     a degenerate bucket is the only loss — its members are
     near-interchangeable by construction. ``None`` disables (plan is
     bit-identical to uncapped)."""
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    from ..functions.vectors import cosine, to_double
 
     if dim is None:
         row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
@@ -275,18 +276,14 @@ def topk_cosine_lsh(
     )
     qvec = queries.select(
         F.col(id_col).alias("query_id"), to_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
+    )
     cvec = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
+    )
     scored = (
         cands.join(qvec, "query_id")
         .join(cvec, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
     )
     return _rank_topk(scored, k)
 
@@ -609,7 +606,7 @@ def topk_cosine_pq(
     vectors — the scan-bandwidth win IS the point of PQ."""
     import pandas as pd
 
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    from ..functions.vectors import cosine, to_double
 
     rerank = rerank or 4 * k
     books = codebooks or train_pq_codebooks(
@@ -665,19 +662,15 @@ def topk_cosine_pq(
     cands = adc.withColumn("__r", F.row_number().over(wa)).where(F.col("__r") <= rerank)
     qv = queries.select(
         F.col(id_col).alias("query_id"), to_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
+    )
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
+    )
     scored = (
         cands.select("query_id", "neighbor_id")
         .join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
     )
     return _rank_topk(scored, k)
 
@@ -845,11 +838,11 @@ def topk_cosine_ivf(
     """
     import numpy as np
 
-    from ..functions.vectors import _probe_order, _rows_mat, cosine_prenormed, norm, to_double
+    from ..functions.vectors import _probe_order, _rows_mat, cosine, to_double
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), to_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
+    )
     # the coarse quantizer only needs to carve space into n_lists regions —
     # fit it on a bounded prefix instead of iterating k-means over the
     # whole corpus (at 100 TB the full fit would dominate the query; the
@@ -863,7 +856,7 @@ def topk_cosine_ivf(
         sample, k=n_lists, seed=seed, iters=max(max_iter, 15)
     )
     inv = nearest_centroid_col(c, "cv", list(enumerate(centers))).select(
-        "neighbor_id", "cv", "cn", "list_id"
+        "neighbor_id", "cv", "list_id"
     )
 
     # probe ranking: one Arrow pass over the query vectors against the
@@ -883,11 +876,10 @@ def topk_cosine_ivf(
 
     q = queries.select(
         F.col(id_col).alias("query_id"), to_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
+    )
     probes = q.select(
         "query_id",
         "qv",
-        "qn",
         F.explode(F.pandas_udf(_probes, "array<int>")(F.col("qv"))).alias("list_id"),
     )
     if scoring_width and scoring_width > 1:
@@ -897,10 +889,6 @@ def topk_cosine_ivf(
     scored = (
         probes.join(inv, "list_id")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("cos"))
     )
     return _rank_topk(scored, k)

@@ -1391,25 +1391,22 @@ def decontaminate_semantic(spark, sf_dir):
     cosine 0.95 of ANY benchmark vector are flagged (the embedding twin
     of decontaminate_ngrams: catches paraphrased eval leakage that
     n-gram overlap misses). The benchmark set is small by nature, so its
-    pre-normed vectors BROADCAST into the corpus scan: one pass, zero
-    corpus shuffle, each (corpus, bench) pair pays one dot fold — the
-    plan that decontaminates a 100 TB corpus without moving it. Flagging
-    dedups via semi-join-style distinct on ids only."""
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    vectors BROADCAST into the corpus scan: one pass, zero corpus
+    shuffle, each (corpus, bench) pair scored by ``vectors.cosine`` —
+    the plan that decontaminates a 100 TB corpus without moving it.
+    Flagging dedups via semi-join-style distinct on ids only."""
+    from ..functions.vectors import cosine, to_double
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", to_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", norm(F.col("v")))
+    )
     bench = e.where(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("b_id"), F.col("v").alias("bv"), F.col("nv").alias("nb")
+        F.col("vec_id").alias("b_id"), F.col("v").alias("bv")
     )
     corpus = e.where(F.col("vec_id") % 25 != 0)
     flagged = (
         corpus.crossJoin(F.broadcast(bench))
-        .where(
-            cosine_prenormed(F.col("v"), F.col("bv"), F.col("nv"), F.col("nb"))
-            >= 0.95
-        )
+        .where(cosine(F.col("v"), F.col("bv")) >= 0.95)
         .select("vec_id")
         .distinct()
     )
@@ -1441,21 +1438,20 @@ def hard_negatives_topk(spark, sf_dir):
     """X3 (training-data flavor): HARD-NEGATIVE mining — for each query
     vector, the top-5 most-similar vectors with a DIFFERENT label (the
     near-miss examples contrastive training wants). Same plan skeleton
-    as brute-force top-k: queries (pre-normed, with their labels)
-    broadcast into one corpus scan, the label inequality rides the join
-    condition so same-label pairs never score, and the per-query top-5
-    is a window rank over candidates only. At 100 TB the corpus side
+    as brute-force top-k: queries (with their labels) broadcast into one
+    corpus scan, the label inequality rides the join condition so
+    same-label pairs never score, and the per-query top-5 is a window
+    rank over candidates only. At 100 TB the corpus side
     would swap in the IVF/PQ candidate path unchanged."""
-    from ..functions.vectors import cosine_prenormed, norm, to_double
+    from ..functions.vectors import cosine, to_double
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", to_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", norm(F.col("v")))
+    )
     q = e.where(F.col("vec_id") < 40).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
         F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
     )
     from pyspark.sql import Window
 
@@ -1465,9 +1461,7 @@ def hard_negatives_topk(spark, sf_dir):
         .select(
             "query_id",
             F.col("vec_id").alias("neg_id"),
-            cosine_prenormed(F.col("qv"), F.col("v"), F.col("nq"), F.col("nv")).alias(
-                "cos"
-            ),
+            cosine(F.col("qv"), F.col("v")).alias("cos"),
         )
     )
     return (

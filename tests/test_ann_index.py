@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from parquetranger_spark.operators.ann_index import AnnIndex
 from parquetranger_spark.operators.similarity import topk_cosine_bruteforce
+from test_pipeline_ops import _ref_cos
 
 
 def _vectors(spark, n, dim=8, seed=7, id0=0):
@@ -48,24 +49,7 @@ def test_query_zero_norm_query_vector(spark, idx):
     assert [r[2] for r in got] == [1, 2, 3]
     assert all(r[3] is None for r in got)
     assert [r[1] for r in got] == sorted(r[1] for r in got)
-    assert idx._probe_rows([(999, [0.0] * 8)], 3)[0][3] == [0, 1, 2]
-
-
-def _ref_cos(a, b):
-    # plain-Python fold: acc = acc + x*y in dimension order; None when a
-    # vector is null, the lengths differ or the result is NaN
-    if a is None or b is None or len(a) != len(b):
-        return None
-
-    def fold(u, v):
-        acc = 0.0
-        for x, y in zip(u, v):
-            acc = acc + x * y
-        return acc
-
-    den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
-    v = fold(a, b) / den if den else math.nan
-    return None if math.isnan(v) else v
+    assert idx._probe_rows([(999, [0.0] * 8)], 3)[0][2] == [0, 1, 2]
 
 
 def test_probe_order_matches_python_sort():
@@ -133,6 +117,76 @@ def test_full_probe_paths_match_bruteforce(spark, tmp_root):
     idx.build(corpus, n_lists=n_lists, seed=1, pq_m=4, pq_codes=8)
     assert rows(idx.query(q, k=k, n_probe=n_lists)) == want
     assert rows(idx.query_pq(q, k=k, n_probe=n_lists, rerank=len(vecs))) == want
+
+
+def _dup_corpus(spark, n=36, seed=11):
+    # a zero-norm row and duplicate vectors (exact score ties)
+    rng = np.random.default_rng(seed)
+    vecs = [list(map(float, r)) for r in rng.normal(size=(n, 8))]
+    vecs[5] = [0.0] * 8
+    vecs[20] = list(vecs[3])
+    return spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_index_with_stored_norm_column_still_serves(spark, tmp_root):
+    """Postings written with a stored ``cn`` norm column (the earlier
+    on-disk shape) still serve: query, query_pq and add ignore the
+    column and return the exact top-k at full probe. A fresh build
+    writes no ``cn``."""
+    corpus = _dup_corpus(spark).cache()
+    q = corpus.where(F.col("vec_id").isin(3, 5, 12, 27))
+    k, n_lists = 4, 4
+    idx = AnnIndex(tmp_root + "/legacy", spark=spark)
+    idx.build(corpus, n_lists=n_lists, seed=1, pq_m=4, pq_codes=8)
+    post = idx.postings.get_full_df()
+    assert "cn" not in post.columns
+    norm = F.sqrt(F.aggregate("cv", F.lit(0.0), lambda acc, x: acc + x * x))
+    idx.postings.add_column("cn", "double")
+    idx.postings.replace_all(post.withColumn("cn", norm).localCheckpoint(eager=True))
+    assert idx.postings.get_full_df().where(F.col("cn") > 0).count() == 35
+
+    want = _rows(topk_cosine_bruteforce(q, corpus, k=k))
+    assert _rows(idx.query(q, k=k, n_probe=n_lists)) == want
+    assert _rows(idx.query_pq(q, k=k, n_probe=n_lists, rerank=100)) == want
+
+    extra = _vectors(spark, 6, seed=3, id0=100)
+    idx.add(extra)
+    assert idx.postings.count_rows() == 42
+    both = corpus.unionByName(extra)
+    want = _rows(topk_cosine_bruteforce(q, both, k=k))
+    assert _rows(idx.query(q, k=k, n_probe=n_lists)) == want
+    assert _rows(idx.query_pq(q, k=k, n_probe=n_lists, rerank=100)) == want
+
+
+def test_serve_blocks_match_single_block(spark, tmp_root, monkeypatch):
+    """A query batch over the block cap is served block by block, one
+    probe frame each, and the union ranks exactly like one block."""
+    from parquetranger_spark.operators import ann_index, similarity
+
+    corpus = _dup_corpus(spark).cache()
+    idx = AnnIndex(tmp_root + "/blocks", spark=spark)
+    idx.build(corpus, n_lists=4, seed=1, pq_m=4, pq_codes=8)
+    q = corpus.where(F.col("vec_id").isin(3, 5, 12, 20, 27))
+    nullq = spark.createDataFrame([(99, None)], "vec_id long, embedding array<double>")
+    single = _rows(idx.query(q.unionByName(nullq), k=3, n_probe=2))
+    single_pq = _rows(idx.query_pq(q, k=3, n_probe=2, rerank=12))
+
+    cut = []
+    blocks = ann_index._serve_blocks
+    monkeypatch.setattr(
+        ann_index, "_serve_blocks", lambda rows, nb: cut.append(blocks(rows, nb)) or cut[-1]
+    )
+    # two dim-8 query vectors: one vector query per probe frame at
+    # n_probe=2 (the null one rides along for free), two per pq round
+    monkeypatch.setattr(similarity, "_QUERY_BLOCK_BYTES", 2 * 8 * 8)
+    assert _rows(idx.query(q.unionByName(nullq), k=3, n_probe=2)) == single
+    assert len(cut[-1]) == 5 and sum(map(len, cut[-1])) == 6
+    assert _rows(idx.query_pq(q, k=3, n_probe=2, rerank=12)) == single_pq
+    assert [len(b) for b in cut[-1]] == [2, 2, 1]
 
 
 def test_query_corpus_with_zero_norm_row(spark, idx):

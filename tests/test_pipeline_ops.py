@@ -105,32 +105,36 @@ def test_bruteforce_topk_is_exact_and_ranked(spark, vecs):
         assert qid not in set(grp.neighbor_id)  # self excluded
 
 
-def _ref_topk(qrows, crows, k):
-    """Plain-Python reference of the exact top-k policy: sequential
-    ``acc = acc + x*y`` folds; a pair's cosine is undefined (None) when
-    either vector is null, the lengths differ or the fold yields NaN,
-    and ranks after every real score, ties by neighbor id; null ids
-    produce no output; self-pairs are excluded."""
+def _ref_cos(a, b):
+    """Plain-Python reference cosine: sequential ``acc = acc + x*y``
+    folds, dot / (norm·norm); undefined (None) when either vector is
+    null, the lengths differ or the fold yields NaN (a NaN or null
+    element, a zero norm)."""
 
-    def fold(a, b):
+    def fold(u, v):
         acc = 0.0
-        for x, y in zip(a, b):
+        for x, y in zip(u, v):
             acc = acc + x * y
         return acc
 
-    def cos(a, b):
-        if a is None or b is None or len(a) != len(b):
-            return None
-        a = [math.nan if x is None else x for x in a]
-        b = [math.nan if x is None else x for x in b]
-        den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
-        v = fold(a, b) / den if den else math.nan  # zero norm: 0/0
-        return None if math.isnan(v) else v
+    if a is None or b is None or len(a) != len(b):
+        return None
+    a = [math.nan if x is None else x for x in a]
+    b = [math.nan if x is None else x for x in b]
+    den = math.sqrt(fold(a, a)) * math.sqrt(fold(b, b))
+    v = fold(a, b) / den if den else math.nan  # zero norm: 0/0
+    return None if math.isnan(v) else v
 
+
+def _ref_topk(qrows, crows, k):
+    """Plain-Python reference of the exact top-k policy: a pair scores
+    :func:`_ref_cos`; an undefined cosine ranks after every real score,
+    ties by neighbor id; null ids produce no output; self-pairs are
+    excluded."""
     out = []
     for qid in sorted({q for q, _ in qrows if q is not None}):
         scored = [
-            (cos(qv, cv), nid)
+            (_ref_cos(qv, cv), nid)
             for q, qv in qrows
             if q == qid
             for nid, cv in crows
@@ -240,6 +244,55 @@ def test_bruteforce_query_blocks_match_single_block(spark, monkeypatch):
     monkeypatch.setattr(similarity, "_KERNEL_MATRIX_BYTES", 2 * 2 * 8)
     for k in (1, 4):
         assert _run_topk(spark, qrows, crows, k, "long", "single") == _ref_topk(qrows, crows, k)
+
+
+@st.composite
+def _cos_pairs(draw):
+    # mostly equal-length pairs (scored), some ragged or null ones, and
+    # several lengths — the empty vector included — in one batch
+    pairs = []
+    for _ in range(draw(st.integers(1, 24))):
+        n = draw(st.integers(0, 5))
+        same = st.lists(_ELEM, min_size=n, max_size=n)
+        a = draw(st.one_of(same, same, same, st.none()))
+        b = draw(st.one_of(same, same, same, _VEC))
+        pairs.append((a, b))
+    return pairs
+
+
+@given(pairs=_cos_pairs())
+@example(
+    pairs=[
+        (_Q1, _V2),  # 0.99388…
+        ([1.0, 1.0], [1.0, 0.0]),  # another length in the same batch
+        ([0.0] * 4, _V2),  # zero norm
+        ([], []),  # empty: 0/0
+        (_Q1, None),  # null vector
+        (_Q1, [1.0, 0.0, 0.0]),  # ragged
+        ([1.0, None, 0.0], [1.0, 1.0, 1.0]),  # null element
+        ([math.nan, 1.0], [1.0, 1.0]),  # NaN element
+        ([-1.0, 0.0, 1.0], [1.0, 0.0, -1.0]),  # -1.0
+    ]
+)
+@settings(max_examples=8, deadline=None)
+def test_cosine_matches_python_reference(spark, pairs):
+    """Differential check of the one exact pair scorer ``vectors.cosine``
+    against the plain-Python reference: bit-identical cos per row (by
+    ``float.hex``) and NULL wherever the reference is undefined, with
+    every row in one Arrow batch and spread across partitions."""
+    from parquetranger_spark.functions.vectors import cosine
+
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i long, a array<double>, b array<double>",
+    )
+    want = [
+        None if c is None else c.hex() for c in (_ref_cos(a, b) for a, b in pairs)
+    ]
+    for frame in (df.coalesce(1), df.repartition(3)):
+        got = frame.select("i", cosine(F.col("a"), F.col("b")).alias("c")).collect()
+        got = [None if r["c"] is None else r["c"].hex() for r in sorted(got)]
+        assert got == want
 
 
 def test_text_functions_shapes(spark, docs):

@@ -19,7 +19,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from parquetranger_spark.functions.vectors import norm, to_double
+from parquetranger_spark.functions.vectors import to_double
 from parquetranger_spark.operators.ann_index import AnnIndex
 
 
@@ -56,7 +56,6 @@ def _pin_drift(idx, spark, lid, n=2000, seed=5, id0=70_000):
     )
     b = (
         df.select("vec_id", to_double(F.col("embedding")).alias("cv"))
-        .withColumn("cn", norm(F.col("cv")))
         .withColumn("list_id", F.lit(int(lid)))
         .withColumn("pq", AnnIndex._encode_udf(meta["books"])(F.col("cv")))
         .withColumn("pq_epoch", F.lit(int(meta["epoch"])))

@@ -44,6 +44,7 @@ by many small adds — the same maintenance story as any table here.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1123,8 +1124,6 @@ class AnnIndex:
             # ADC must score against those (round-9 advice; the next
             # maintain() repairs the table atomically)
             cur_epoch = min(metas)
-        from functools import reduce
-
         from .similarity import _adc_udf, _lut_rows, _ship
 
         q_rows = [(r["query_id"], r["qv"]) for r in q.select("query_id", "qv").collect()]
@@ -1269,8 +1268,6 @@ class AnnIndex:
         exclude_self: bool,
         where: str | None,
     ) -> DataFrame:
-        from functools import reduce
-
         spark = self.postings._session()
         post = self.postings.get_full_df()
 
